@@ -1,11 +1,31 @@
-"""Dotted-path column helpers — the columnar analogue of Beats' MapStr.
+"""Dotted-path column helpers and the field-write overlay — the columnar
+analogue of Beats' MapStr.
 
 The reference mutates row documents in place with dotted-path resolution
 (common.MapStr: mapFind at libbeat/common/mapstr.go:444-482, Put/GetValue/
 Delete at mapstr.go:124-201, AddTags at mapstr.go:377-412). Here a "path"
 addresses nested StructType columns and every "mutation" is a projection the
 optimizer can see through: set = struct rebuild via Column.withField, delete
-= Column.dropFields, tags = array_union. All plan-time; nothing per-row.
+= Column.dropFields, tags = array concat. All plan-time; nothing per-row.
+
+Processors write through one primitive, :class:`Event`, built per stage
+application from ``(df, cond)``:
+
+- reads (``get``/``has``/``type``) see the writes made earlier in the same
+  stage, so rule *n* of a ``fields`` list sees the result of rules
+  1..n-1 — the reference's sequential per-event semantics;
+- writes (``set``/``drop``) are recorded, not applied. Under ``cond`` a set
+  records ``when(cond, v).otherwise(current)``, so rows outside the
+  condition keep their value;
+- ``frame()`` applies every recorded write in ONE batched
+  :func:`with_paths` projection: 3 eager plan analyses per stage, 1 when
+  every target is top-level.
+
+Recorded writes never overlap. An access to a path in a strict
+segment-prefix relation to a recorded write (``a`` vs ``a.b``), a
+``type`` of a recorded path, and an unconditional ``drop`` apply the
+recorded writes first (a flush). Use a value read through the overlay in
+the next ``set``: a later read may flush.
 """
 
 from __future__ import annotations
@@ -29,12 +49,7 @@ def col_path(path: str) -> Column:
 
 def has_path(schema: T.StructType, path: str) -> bool:
     """True if the dotted path resolves to a field in the schema."""
-    cur: T.DataType = schema
-    for part in split_path(path):
-        if not isinstance(cur, T.StructType) or part not in cur.fieldNames():
-            return False
-        cur = cur[part].dataType
-    return True
+    return path_type(schema, path) is not None
 
 
 def path_type(schema: T.StructType, path: str) -> T.DataType | None:
@@ -53,13 +68,6 @@ def get_path(df: DataFrame, path: str, default: Column | None = None) -> Column:
     return default if default is not None else F.lit(None)
 
 
-def _fresh_struct(parts: list[str], value: Column) -> Column:
-    out = value
-    for p in reversed(parts):
-        out = F.struct(out.alias(p))
-    return out
-
-
 def _null_struct(t: T.StructType) -> Column:
     """A non-NULL struct value whose every field is NULL — the writable
     stand-in for a per-row NULL struct (withField on a NULL struct returns
@@ -72,81 +80,6 @@ def _null_struct(t: T.StructType) -> Column:
 
 def _writable(parent: Column, t: T.StructType) -> Column:
     return F.when(parent.isNotNull(), parent).otherwise(_null_struct(t))
-
-
-def _set_nested(parent: Column, parent_type: T.StructType, parts: list[str], value: Column) -> Column:
-    orig = parent
-    parent = _writable(parent, parent_type)
-    name = parts[0]
-    if len(parts) == 1:
-        out = parent.withField(_quote(name), value)
-    else:
-        child_t = parent_type[name].dataType if name in parent_type.fieldNames() else None
-        if isinstance(child_t, T.StructType):
-            out = parent.withField(
-                _quote(name), _set_nested(parent.getField(name), child_t, parts[1:], value)
-            )
-        else:
-            # child missing (or a scalar being overwritten): build the chain
-            # fresh, matching MapStr.Put which creates intermediate maps
-            # (mapstr.go:462-478).
-            out = parent.withField(_quote(name), _fresh_struct(parts[1:], value))
-    # Conditional processors write when(cond, v).otherwise(old NULL); rows the
-    # processor left untouched must keep parent=NULL instead of flipping to an
-    # all-null struct (MapStr.Put only creates intermediates for events the
-    # processor actually ran on).
-    return F.when(orig.isNull() & value.isNull(), F.lit(None)).otherwise(out)
-
-
-def _tmp_name(df: DataFrame) -> str:
-    """Staging-column name guaranteed absent from df (a user column named
-    __with_path_value__ must survive a with_path call untouched). Compared
-    case-insensitively: Spark resolution is case-insensitive by default, so
-    withColumn would REPLACE a column differing only in case."""
-    name, i = "__with_path_value__", 0
-    existing = {c.lower() for c in df.columns}
-    while name.lower() in existing:
-        i += 1
-        name = f"__with_path_value_{i}__"
-    return name
-
-
-def with_path(df: DataFrame, path: str, value: Column) -> DataFrame:
-    """Set/overwrite a (possibly nested) field; creates intermediates."""
-    parts = split_path(path)
-    root = parts[0]
-    if len(parts) == 1:
-        return df.withColumn(root, value)
-    if root in df.schema.fieldNames():
-        root_t = df.schema[root].dataType
-        if isinstance(root_t, T.StructType):
-            # Stage the value as a temp column first: _set_nested references
-            # it at every nesting level (leaf write + NULL-restore guard), and
-            # inlining a large expression tree that many times blows up
-            # codegen. As an attribute reference it stays cheap, and
-            # CollapseProject (SPARK-36718) won't re-inline an expensive
-            # multi-referenced alias.
-            tmp = _tmp_name(df)
-            staged = df.withColumn(tmp, value)
-            out = staged.withColumn(
-                root,
-                _set_nested(F.col(_quote(root)), root_t, parts[1:], F.col(tmp)),
-            )
-            return out.drop(tmp)
-        # scalar root being turned into an object — MapStr.Put would error;
-        # we overwrite (documented divergence, keeps the plan total).
-    # Fresh root: keep it NULL on rows the processor left untouched (leaf
-    # value NULL) instead of materializing an all-null struct — same
-    # MapStr.Put fidelity as above, same staging trick for codegen size.
-    tmp = _tmp_name(df)
-    staged = df.withColumn(tmp, value)
-    vref = F.col(tmp)
-    out = staged.withColumn(
-        root,
-        F.when(vref.isNull(), F.lit(None))
-        .otherwise(_fresh_struct(parts[1:], vref)),
-    )
-    return out.drop(tmp)
 
 
 def _fresh_tree(tree: dict) -> Column:
@@ -171,11 +104,12 @@ def _all_null(values: list[Column]) -> Column:
 
 
 def _set_tree(parent: Column, parent_type: T.StructType, tree: dict) -> Column:
-    """Multi-leaf generalization of _set_nested: writes EVERY (sub)field of
-    ``tree`` into ``parent`` in one pass, with the same per-level NULL
-    restore (a NULL parent stays NULL only when every value written at or
-    below that level is NULL — exactly what sequential _set_nested calls
-    converge to)."""
+    """Write EVERY (sub)field of ``tree`` into ``parent`` in one pass. A
+    missing (or scalar) child is built fresh, as MapStr.Put creates
+    intermediate maps (mapstr.go:462-478). A NULL parent stays NULL when
+    every value written at or below it is NULL: a conditional write
+    (``when(cond, v).otherwise(old NULL)``) must not turn the untouched
+    rows' NULL parent into an all-null struct."""
     orig = parent
     out = _writable(parent, parent_type)
     for name, sub in tree.items():
@@ -193,101 +127,73 @@ def _set_tree(parent: Column, parent_type: T.StructType, tree: dict) -> Column:
                   F.lit(None)).otherwise(out)
 
 
-def with_paths(df: DataFrame, updates: dict[str, Column]) -> DataFrame:
-    """Set several (possibly nested) fields with a BOUNDED number of eager
-    plan analyses: one staging projection for all values, one projection
-    writing every touched root, one drop — instead of with_path's three
-    eager ops PER path (measured ~0.15 s of driver time each on plans
-    carrying large expression trees; user_agent writes 7 paths).
+def with_path(df: DataFrame, path: str, value: Column) -> DataFrame:
+    """Set/overwrite a (possibly nested) field; creates intermediates."""
+    return with_paths(df, {path: value})
 
-    Semantics notes:
-    - values are resolved against the INPUT frame (snapshot semantics); a
-      value that must read another entry's target should substitute that
-      entry's VALUE expression instead (see copy_fields' chaining) — the
-      sequential loop's read-your-writes by NAME is not reproduced;
-    - when one update path is a segment-prefix of another (inherently
-      order-dependent) this falls back to exactly the sequential loop;
-    - a subtree written with all-NULL values materializes as a struct of
-      NULLs when a sibling value is non-NULL (the sequential loop's result
-      for that corner depended on write ORDER; this is the normalized,
-      order-independent form). A root whose every written value is NULL
-      stays NULL, same as with_path."""
-    if len(updates) <= 1:
-        for p, v in updates.items():
-            df = with_path(df, p, v)
-        return df
-    # build one {field: value-or-subtree} tree per root column; bail to the
-    # sequential loop on prefix-overlapping paths
+
+def with_paths(df: DataFrame, updates: dict[str, Column]) -> DataFrame:
+    """Set several (possibly nested) fields in one batch. Top-level targets
+    go straight into one ``withColumns``. Nested values are first staged as
+    temp columns (one projection), then every touched root is rebuilt from
+    those cheap attribute refs (a second), then the temps are dropped: 3
+    eager plan analyses for the whole batch, 1 when every target is
+    top-level. Staging keeps codegen small: the rebuild references each
+    value at every nesting level, and CollapseProject (SPARK-36718) does
+    not re-inline an expensive multi-referenced alias.
+
+    Every value resolves against ``df``. No path may equal or be a
+    segment-prefix of another (:class:`Event` flushes before that happens).
+    A subtree written with all-NULL values materializes as a struct of
+    NULLs when a sibling value is non-NULL (one ``with_path`` per leaf
+    gives an order-dependent result there; this is the order-independent
+    form). A root whose every written value is NULL stays NULL."""
     trees: dict[str, object] = {}
     for path, value in updates.items():
-        parts = split_path(path)
-        if len(parts) == 1:
-            if parts[0] in trees:
-                return _with_paths_seq(df, updates)
-            trees[parts[0]] = value
-            continue
-        node = trees.setdefault(parts[0], {})
-        if not isinstance(node, dict):
-            return _with_paths_seq(df, updates)
-        for p in parts[1:-1]:
-            nxt = node.setdefault(p, {})
-            if not isinstance(nxt, dict):
-                return _with_paths_seq(df, updates)
-            node = nxt
-        if parts[-1] in node:
-            return _with_paths_seq(df, updates)
-        node[parts[-1]] = value
+        *parents, leaf = split_path(path)
+        node = trees
+        for p in parents:
+            node = node.setdefault(p, {})
+            if not isinstance(node, dict):
+                raise ValueError(f"with_paths: {path!r} overlaps another path")
+        if leaf in node:
+            raise ValueError(f"with_paths: {path!r} overlaps another path")
+        node[leaf] = value
 
-    # stage every leaf value once (one projection), then write roots from
-    # cheap attribute refs (same codegen-size rationale as with_path).
-    # Collision set includes the UPDATE TARGET roots: a user column
-    # literally named __wpN__ being written must not be claimed as a temp
-    # and then dropped (with_path's _tmp_name hardening, kept here)
-    existing = {c.lower() for c in df.columns} | {r.lower() for r in trees}
+    # temp names avoid existing columns AND the target roots: a user column
+    # literally named __wpN__ must be neither claimed nor dropped
+    taken = {c.lower() for c in df.columns} | {r.lower() for r in trees}
     temps: dict[str, Column] = {}
-    ref_trees: dict[str, object] = {}
     i = 0
 
-    def stage(value: Column) -> Column:
+    def stage(tree):
         nonlocal i
-        while f"__wp{i}__" in existing:
+        if isinstance(tree, dict):
+            return {k: stage(v) for k, v in tree.items()}
+        while f"__wp{i}__" in taken:
             i += 1
         name = f"__wp{i}__"
         i += 1
-        temps[name] = value
+        temps[name] = tree
         return F.col(name)
 
-    def refit(tree):
-        if isinstance(tree, dict):
-            return {k: refit(v) for k, v in tree.items()}
-        return stage(tree)
-
+    roots: dict[str, Column] = {}
     for root, tree in trees.items():
-        ref_trees[root] = refit(tree)
-    staged = df.withColumns(temps)
-
-    root_cols: dict[str, Column] = {}
-    for root, tree in ref_trees.items():
         if not isinstance(tree, dict):
-            root_cols[root] = tree
+            roots[root] = tree
             continue
-        root_t = (df.schema[root].dataType
-                  if root in df.schema.fieldNames() else None)
+        refs = stage(tree)
+        root_t = df.schema[root].dataType if root in df.columns else None
         if isinstance(root_t, T.StructType):
-            root_cols[root] = _set_tree(F.col(_quote(root)), root_t, tree)
+            roots[root] = _set_tree(F.col(_quote(root)), root_t, refs)
         else:
             # fresh (or scalar-overwritten) root: NULL when every written
-            # value is NULL — the with_path fresh-root guard, multi-leaf
-            root_cols[root] = F.when(
-                _all_null(_leaf_values(tree)), F.lit(None)
-            ).otherwise(_fresh_tree(tree))
-    return staged.withColumns(root_cols).drop(*temps)
-
-
-def _with_paths_seq(df: DataFrame, updates: dict[str, Column]) -> DataFrame:
-    for p, v in updates.items():
-        df = with_path(df, p, v)
-    return df
+            # value is NULL, the same guard _set_tree applies per level
+            roots[root] = F.when(_all_null(_leaf_values(refs)), F.lit(None)
+                                 ).otherwise(_fresh_tree(refs))
+    if not temps:
+        return df.withColumns(roots)
+    return df.withColumns(temps).withColumns(roots).drop(*temps)
 
 
 def drop_path(df: DataFrame, path: str) -> DataFrame:
@@ -296,15 +202,6 @@ def drop_path(df: DataFrame, path: str) -> DataFrame:
     if not has_path(df.schema, path):
         return df
     parts = split_path(path)
-
-    def type_at(ps: list[str]) -> T.DataType | None:
-        cur: T.DataType = df.schema
-        for p in ps:
-            if not isinstance(cur, T.StructType) or p not in cur.fieldNames():
-                return None
-            cur = cur[p].dataType
-        return cur
-
     # a struct must never be left EMPTY (Spark refuses with
     # CANNOT_DROP_ALL_FIELDS): when the immediate parent holds only this
     # field, drop the parent instead — recursively, the columnar analogue
@@ -312,7 +209,7 @@ def drop_path(df: DataFrame, path: str) -> DataFrame:
     # system.syslog.timestamp when it is syslog's last field removes
     # system.syslog; if syslog was system's last field, system goes too)
     while len(parts) > 1:
-        parent_t = type_at(parts[:-1])
+        parent_t = path_type(df.schema, ".".join(parts[:-1]))
         if isinstance(parent_t, T.StructType) and len(parent_t.fields) == 1:
             parts = parts[:-1]
             continue
@@ -324,18 +221,108 @@ def drop_path(df: DataFrame, path: str) -> DataFrame:
     return df.withColumn(root, F.col(_quote(root)).dropFields(nested))
 
 
+class Event:
+    """Read-your-writes overlay over one frame: the per-stage write
+    primitive (see the module docstring for the contract)."""
+
+    def __init__(self, df: DataFrame, cond: Column | None = None):
+        self._df = df
+        self._cond = cond
+        self._pending: dict[str, Column] = {}
+        self._temps: list[str] = []
+
+    def _flush(self, carry: Column | None = None) -> Column | None:
+        """Apply the pending writes mid-stage. Expressions built against
+        the old frame that must outlive it (``carry``, a value about to be
+        set, and ``cond``) ride along as temp columns of the same
+        projection, so they keep reading the values they were built
+        from."""
+        if not self._pending:
+            return carry
+        ups, self._pending = self._pending, {}
+        if self._cond is not None and not self._temps:  # first flush
+            self._cond = self._temp(ups, self._cond)
+        if carry is not None:
+            carry = self._temp(ups, carry)
+        self._df = with_paths(self._df, ups)
+        return carry
+
+    def _temp(self, ups: dict[str, Column], value: Column) -> Column:
+        taken = ({c.lower() for c in self._df.columns}
+                 | {split_path(p)[0].lower() for p in ups})
+        i = len(self._temps)
+        while f"__ev{i}__" in taken:
+            i += 1
+        name = f"__ev{i}__"
+        ups[name] = value
+        self._temps.append(name)
+        return F.col(name)
+
+    def _sync(self, path: str, carry: Column | None = None) -> Column | None:
+        """Flush first when ``path`` is a strict segment-prefix of a pending
+        write, or extends one."""
+        if any(path.startswith(p + ".") or p.startswith(path + ".")
+               for p in self._pending):
+            return self._flush(carry)
+        return carry
+
+    def get(self, path: str) -> Column:
+        """Current value of ``path``, NULL when absent."""
+        if path in self._pending:
+            return self._pending[path]
+        self._sync(path)
+        return get_path(self._df, path)
+
+    def has(self, path: str) -> bool:
+        if path in self._pending:
+            return True
+        self._sync(path)
+        return has_path(self._df.schema, path)
+
+    def type(self, path: str) -> T.DataType | None:
+        if path in self._pending:
+            self._flush()
+        self._sync(path)
+        return path_type(self._df.schema, path)
+
+    def set(self, path: str, value: Column) -> None:
+        value = self._sync(path, value)
+        if self._cond is not None:
+            value = F.when(self._cond, value).otherwise(self.get(path))
+        self._pending[path] = value
+
+    def drop(self, path: str) -> None:
+        """Delete ``path`` if present; under ``cond``, NULL it on the
+        matching rows."""
+        if not self.has(path):
+            return
+        if self._cond is not None:
+            self.set(path, F.lit(None))
+        else:
+            self._flush()
+            self._df = drop_path(self._df, path)
+
+    def frame(self) -> DataFrame:
+        """The frame with every write applied (``df`` itself when nothing
+        was written)."""
+        if self._pending:
+            self._df = with_paths(self._df, self._pending)
+            self._pending = {}
+        return self._df.drop(*self._temps) if self._temps else self._df
+
+
 def rename_path(df: DataFrame, src: str, dst: str) -> DataFrame:
     """Move a field (actions/rename.go:75 renameField = copy + delete)."""
     df = with_path(df, dst, get_path(df, src))
     return drop_path(df, src)
 
 
-def tags_expr(df: DataFrame, tags: list[str], target: str = "tags") -> Column:
+def tags_expr(ev: Event, tags: list[str], target: str = "tags") -> Column:
     """Expression appending tags to an array field, creating it if needed
     (MapStr.AddTagsWithKey, mapstr.go:390-412; de-dup preserving order is
     NOT done by the reference, so plain concat)."""
-    existing = get_path(df, target)
-    existing_t = path_type(df.schema, target)
+    existing_t = ev.type(target)
+    existing = ev.get(target)
     if isinstance(existing_t, T.ArrayType):
         base = F.coalesce(existing, F.array().cast("array<string>"))
     elif isinstance(existing_t, T.StringType):
@@ -347,7 +334,9 @@ def tags_expr(df: DataFrame, tags: list[str], target: str = "tags") -> Column:
 
 
 def add_tags(df: DataFrame, tags: list[str], target: str = "tags") -> DataFrame:
-    return with_path(df, target, tags_expr(df, tags, target))
+    ev = Event(df)
+    ev.set(target, tags_expr(ev, tags, target))
+    return ev.frame()
 
 
 def append_flag(df: DataFrame, flag: str, cond: Column | None = None,

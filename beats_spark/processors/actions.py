@@ -6,13 +6,14 @@ work is pure column algebra — no Python in the hot path.
 
 from __future__ import annotations
 
+import re
 from typing import Any
 
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql import types as T
 
-from beats_spark.event import add_tags as _add_tags
-from beats_spark.event import append_flag, get_path, has_path, path_type
+from beats_spark.event import (Event, append_flag, get_path, has_path,
+                               path_type, tags_expr, with_path)
 from beats_spark.processors.base import Stage, register
 
 # fields the reference refuses to drop (actions/drop_fields.go:24) mapped to
@@ -39,12 +40,9 @@ def add_fields(cfg: dict[str, Any]) -> Stage:
     target = cfg.get("target", "fields")
 
     class AddFields(Stage):
-        def updates(self, df: DataFrame) -> dict[str, Column]:
-            flat = _flatten(fields)
-            return {
-                (f"{target}.{path}" if target else path): F.lit(v)
-                for path, v in flat.items()
-            }
+        def updates(self, ev: Event) -> None:
+            for path, v in _flatten(fields).items():
+                ev.set(f"{target}.{path}" if target else path, F.lit(v))
 
     return AddFields()
 
@@ -57,14 +55,14 @@ def add_labels(cfg: dict[str, Any]) -> Stage:
     flat = _flatten(cfg.get("labels", {}))
 
     class AddLabels(Stage):
-        def updates(self, df: DataFrame) -> dict[str, Column]:
-            if isinstance(path_type(df.schema, "labels"), T.StructType):
-                col = get_path(df, "labels")
+        def updates(self, ev: Event) -> None:
+            if isinstance(ev.type("labels"), T.StructType):
+                col = ev.get("labels")
                 for k, v in flat.items():
                     col = col.withField("`" + k.replace("`", "``") + "`", F.lit(v))
             else:
                 col = F.struct(*[F.lit(v).alias(k) for k, v in flat.items()])
-            return {"labels": col}
+            ev.set("labels", col)
 
     return AddLabels()
 
@@ -77,23 +75,16 @@ def add_tags_proc(cfg: dict[str, Any]) -> Stage:
 
     class AddTags(Stage):
         def apply(self, df: DataFrame, cond: Column | None = None) -> DataFrame:
-            if cond is None:
-                return _add_tags(df, tags, target)
-            from beats_spark.event import path_type, tags_expr, with_path
-            from pyspark.sql import types as T
+            if isinstance(path_type(df.schema, target), T.StringType):
+                # a column has one type: wrap a scalar tag into a
+                # one-element array on EVERY row first (mapstr.go:399-403),
+                # so rows outside ``when`` hold an array too
+                cur = get_path(df, target)
+                df = with_path(df, target, F.when(cur.isNotNull(), F.array(cur)))
+            return super().apply(df, cond)
 
-            appended = tags_expr(df, tags, target)
-            t = path_type(df.schema, target)
-            if isinstance(t, T.ArrayType):
-                old = get_path(df, target)
-            elif isinstance(t, T.StringType):
-                # both when-branches must be array<string>: wrap the scalar
-                # like the unconditional path does (mapstr.go:399-403)
-                old = F.when(get_path(df, target).isNotNull(),
-                             F.array(get_path(df, target)))
-            else:
-                old = F.lit(None).cast("array<string>")
-            return with_path(df, target, F.when(cond, appended).otherwise(old))
+        def updates(self, ev: Event) -> None:
+            ev.set(target, tags_expr(ev, tags, target))
 
     return AddTags()
 
@@ -108,15 +99,14 @@ def rename(cfg: dict[str, Any]) -> Stage:
     fail_on_error = cfg.get("fail_on_error", True)
 
     class Rename(Stage):
-        def apply(self, df: DataFrame, cond: Column | None = None) -> DataFrame:
-            from beats_spark.event import rename_path, with_path
+        def updates(self, ev: Event) -> None:
             for p in pairs:
                 src, dst = p["from"], p["to"]
-                if not has_path(df.schema, src):
+                if not ev.has(src):
                     if ignore_missing or not fail_on_error:
                         continue
                     raise ValueError(f"rename: missing source field {src!r}")
-                if has_path(df.schema, dst):
+                if ev.has(dst):
                     if fail_on_error:
                         raise ValueError(
                             f"rename: target field {dst!r} already exists")
@@ -124,12 +114,8 @@ def rename(cfg: dict[str, Any]) -> Stage:
                     # with fail_on_error=false the event stays UNCHANGED —
                     # not overwritten (actions/rename.go:75-98)
                     continue
-                if cond is None:
-                    df = rename_path(df, src, dst)
-                else:
-                    df = with_path(df, dst, F.when(cond, get_path(df, src)))
-                    df = with_path(df, src, F.when(cond, F.lit(None)).otherwise(get_path(df, src)))
-            return df
+                ev.set(dst, ev.get(src))
+                ev.drop(src)
 
     return Rename()
 
@@ -142,27 +128,16 @@ def copy_fields(cfg: dict[str, Any]) -> Stage:
     fail_on_error = cfg.get("fail_on_error", True)
 
     class CopyFields(Stage):
-        def updates(self, df: DataFrame) -> dict[str, Column]:
-            # the reference copies pairs SEQUENTIALLY per event, so a later
-            # pair may read an earlier pair's target; updates() values are
-            # resolved against the INPUT frame (with_paths snapshot
-            # semantics), so chain by substituting the earlier pair's
-            # VALUE expression instead of a by-name read
-            out: dict[str, Column] = {}
+        def updates(self, ev: Event) -> None:
             for p in pairs:
                 src, dst = p["from"], p["to"]
-                if src in out:
-                    v = out[src]
-                elif has_path(df.schema, src):
-                    v = get_path(df, src)
-                else:
+                if not ev.has(src):
                     if ignore_missing or not fail_on_error:
                         continue
                     raise ValueError(f"copy_fields: missing source field {src!r}")
-                if dst not in out and has_path(df.schema, dst) and fail_on_error:
+                if fail_on_error and ev.has(dst):
                     raise ValueError(f"copy_fields: target {dst!r} already exists")
-                out[dst] = v
-            return out
+                ev.set(dst, ev.get(src))
 
     return CopyFields()
 
@@ -175,17 +150,15 @@ def drop_fields(cfg: dict[str, Any]) -> Stage:
     ignore_missing = cfg.get("ignore_missing", True)
 
     class DropFields(Stage):
-        def drops(self, df: DataFrame) -> list[str]:
-            out = []
+        def updates(self, ev: Event) -> None:
             for fld in fields:
                 if fld in PROTECTED_FIELDS:
                     continue
-                if not has_path(df.schema, fld):
+                if not ev.has(fld):
                     if not ignore_missing:
                         raise ValueError(f"drop_fields: missing field {fld!r}")
                     continue
-                out.append(fld)
-            return out
+                ev.drop(fld)
 
     return DropFields()
 
@@ -199,8 +172,6 @@ def include_fields(cfg: dict[str, Any]) -> Stage:
 
     class IncludeFields(Stage):
         def custom(self, df: DataFrame) -> DataFrame:
-            from pyspark.sql import types as T
-
             wanted = set(fields) | PROTECTED_FIELDS
 
             def prune(col: Column, dtype, prefix: str) -> Column | None:
@@ -259,18 +230,15 @@ def replace(cfg: dict[str, Any]) -> Stage:
     ignore_missing = cfg.get("ignore_missing", False)
 
     class Replace(Stage):
-        def updates(self, df: DataFrame) -> dict[str, Column]:
-            out: dict[str, Column] = {}
+        def updates(self, ev: Event) -> None:
             for r in rules:
                 fld = r["field"]
-                if not has_path(df.schema, fld):
+                if not ev.has(fld):
                     if ignore_missing:
                         continue
                     raise ValueError(f"replace: missing field {fld!r}")
-                out[fld] = F.regexp_replace(
-                    get_path(df, fld), r["pattern"], r.get("replacement", "")
-                )
-            return out
+                ev.set(fld, F.regexp_replace(
+                    ev.get(fld), r["pattern"], r.get("replacement", "")))
 
     return Replace()
 
@@ -288,7 +256,6 @@ def truncate_fields(cfg: dict[str, Any]) -> Stage:
 
     class Truncate(Stage):
         def apply(self, df: DataFrame, cond: Column | None = None) -> DataFrame:
-            from beats_spark.event import with_path
             # conditions must be evaluated against PRE-truncation values, so
             # the flag is materialized into a temp column before mutation
             any_trunc = F.lit(False)
@@ -304,7 +271,6 @@ def truncate_fields(cfg: dict[str, Any]) -> Stage:
                     b = F.encode(col, "UTF-8")
                     # clip to max_bytes then walk back over a split UTF-8
                     # sequence by dropping trailing continuation bytes
-                    raw = F.substring(b, 1, int(max_bytes))
                     clipped = F.expr(
                         f"decode(substring(encode({'`'+fld.replace('.','`.`')+'`'}, 'UTF-8'), 1, {int(max_bytes)}), 'UTF-8')"
                     )
@@ -312,7 +278,6 @@ def truncate_fields(cfg: dict[str, Any]) -> Stage:
                     # U+FFFD; strip any trailing replacement chars
                     clipped = F.regexp_replace(clipped, "�+$", "")
                     did = F.length(b) > int(max_bytes)
-                    _ = raw
                 did = F.coalesce(did, F.lit(False))
                 if cond is not None:
                     did = cond & did
@@ -337,14 +302,12 @@ def extract_field(cfg: dict[str, Any]) -> Stage:
     target = cfg.get("target") or fld
 
     class ExtractField(Stage):
-        def updates(self, df: DataFrame) -> dict[str, Column]:
-            import re as _re
-
+        def updates(self, ev: Event) -> None:
             # the reference splits on a LITERAL separator (strings.Split);
             # F.split takes a Java regex, so metacharacters ('.', '|') must
             # be escaped or they split on every character
-            parts = F.split(get_path(df, fld), _re.escape(sep), -1)
-            return {target: F.element_at(parts, idx + 1)}
+            parts = F.split(ev.get(fld), re.escape(sep), -1)
+            ev.set(target, F.element_at(parts, idx + 1))
 
     return ExtractField()
 
@@ -357,8 +320,8 @@ def decode_base64_field(cfg: dict[str, Any]) -> Stage:
     src, dst = spec["from"], spec.get("to", spec["from"])
 
     class DecodeB64(Stage):
-        def updates(self, df: DataFrame) -> dict[str, Column]:
-            return {dst: F.unbase64(get_path(df, src)).cast("string")}
+        def updates(self, ev: Event) -> None:
+            ev.set(dst, F.unbase64(ev.get(src)).cast("string"))
 
     return DecodeB64()
 
@@ -370,12 +333,10 @@ def urldecode(cfg: dict[str, Any]) -> Stage:
     rules = cfg.get("fields", [])
 
     class UrlDecode(Stage):
-        def updates(self, df: DataFrame) -> dict[str, Column]:
-            out = {}
+        def updates(self, ev: Event) -> None:
             for r in rules:
                 src, dst = r["from"], r.get("to", r["from"])
-                out[dst] = F.try_url_decode(get_path(df, src))
-            return out
+                ev.set(dst, F.try_url_decode(ev.get(src)))
 
     return UrlDecode()
 
@@ -396,12 +357,12 @@ def split_field(cfg: dict[str, Any]) -> Stage:
     ignore_missing = cfg.get("ignore_missing", False)
 
     class Split(Stage):
-        def updates(self, df: DataFrame) -> dict[str, Column]:
-            if not has_path(df.schema, fld):
+        def updates(self, ev: Event) -> None:
+            if not ev.has(fld):
                 if ignore_missing:
-                    return {}
+                    return
                 raise ValueError(f"split: missing field {fld!r}")
-            col = get_path(df, fld).cast("string")
+            col = ev.get(fld).cast("string")
             arr = F.split(col, sep)
             # length of the trailing run of empty fragments
             trail = F.aggregate(
@@ -414,7 +375,7 @@ def split_field(cfg: dict[str, Any]) -> Stage:
                 lambda acc: acc["n"])
             parts = F.when(col == "", F.array(F.lit(""))).otherwise(
                 F.slice(arr, 1, F.size(arr) - trail))
-            return {target: F.when(col.isNotNull(), parts)}
+            ev.set(target, F.when(col.isNotNull(), parts))
 
     return Split()
 
@@ -441,12 +402,12 @@ def uri_parts(cfg: dict[str, Any]) -> Stage:
     ignore_missing = cfg.get("ignore_missing", False)
 
     class UriParts(Stage):
-        def updates(self, df: DataFrame) -> dict[str, Column]:
-            if not has_path(df.schema, fld):
+        def updates(self, ev: Event) -> None:
+            if not ev.has(fld):
                 if ignore_missing:
-                    return {}
+                    return
                 raise ValueError(f"uri_parts: missing field {fld!r}")
-            col = get_path(df, fld).cast("string")
+            col = ev.get(fld).cast("string")
             has_scheme = col.rlike("^[A-Za-z][A-Za-z0-9+.-]*://")
             # scheme-less inputs parse against a synthetic base. Inputs not
             # starting with '/' (e.g. 'example.com/x', '../a') get a '/'
@@ -489,6 +450,7 @@ def uri_parts(cfg: dict[str, Any]) -> Stage:
             }
             if keep_original:
                 out[f"{target}.original"] = col
-            return out
+            for path, value in out.items():
+                ev.set(path, value)
 
     return UriParts()

@@ -7,8 +7,14 @@ The reference runs processors serially per event; nil return = drop
 Here a Stage declares itself in one of three shapes so conditions can be
 fused into the SAME projection instead of branching per row:
 
-- *project*: ``updates() -> {dotted_path: Column}`` (+ ``drops()``) — under
-  ``when``, each update becomes ``F.when(cond, new).otherwise(old)``;
+- *project*: ``updates(ev)`` reads and writes fields through an
+  :class:`~beats_spark.event.Event` overlay built from ``(df, cond)``. Each
+  rule reads the writes of the rules before it (the reference's sequential
+  semantics); under ``when`` every write becomes
+  ``F.when(cond, new).otherwise(old)``; all writes land in one batched
+  projection, flushed early only when a rule touches a path that is a
+  segment-prefix of (or extends) an earlier write, or drops a field
+  unconditionally;
 - *filter*: ``keep() -> Column`` — under ``when`` it becomes
   ``~cond | keep`` (drop only matching rows);
 - *custom*: ``custom(df) -> df`` (mapInPandas etc.) — under ``when`` the
@@ -26,23 +32,9 @@ from typing import Any, Callable
 from pyspark.sql import Column, DataFrame, functions as F
 
 from beats_spark.conditions import compile_condition
-from beats_spark.event import (drop_path, get_path, has_path, with_path,
-                               with_paths)
+from beats_spark.event import Event
 
 _cond_counter = itertools.count()
-
-
-def _paths_overlap(updates: dict[str, "Column"]) -> bool:
-    """True when any update path is a segment-prefix of another (writes
-    then depend on application order)."""
-    paths = list(updates)
-    pref = {tuple(p.split(".")) for p in paths}
-    for p in paths:
-        parts = p.split(".")
-        for k in range(1, len(parts)):
-            if tuple(parts[:k]) in pref:
-                return True
-    return False
 
 
 class Stage:
@@ -50,11 +42,8 @@ class Stage:
 
     name = "stage"
 
-    def updates(self, df: DataFrame) -> dict[str, Column]:
-        return {}
-
-    def drops(self, df: DataFrame) -> list[str]:
-        return []
+    def updates(self, ev: Event) -> None:
+        pass
 
     def keep(self, df: DataFrame) -> Column | None:
         return None
@@ -82,36 +71,9 @@ class Stage:
                 else (~F.coalesce(cond, F.lit(False)) | keep)
             )
 
-        ups = self.updates(df)
-        if _paths_overlap(ups):
-            # one update path is a prefix of another: order-dependent —
-            # keep the exact sequential semantics, including per-write
-            # has_path against the EVOLVING schema for the cond fallback
-            for path, new in ups.items():
-                if cond is not None:
-                    old = (get_path(df, path) if has_path(df.schema, path)
-                           else F.lit(None))
-                    new = F.when(cond, new).otherwise(old)
-                df = with_path(df, path, new)
-        else:
-            if cond is not None:
-                ups = {
-                    path: F.when(cond, new).otherwise(
-                        get_path(df, path) if has_path(df.schema, path)
-                        else F.lit(None))
-                    for path, new in ups.items()
-                }
-            # one batched write: 3 eager plan analyses total instead of 3
-            # per path (user_agent alone writes 7 paths — measured ~1 s of
-            # driver time per apply in the sequential form)
-            df = with_paths(df, ups)
-        for path in self.drops(df):
-            if cond is None:
-                df = drop_path(df, path)
-            elif has_path(df.schema, path):
-                # per-row "delete" under a condition: null out for matches
-                df = with_path(df, path, F.when(cond, F.lit(None)).otherwise(get_path(df, path)))
-        return df
+        ev = Event(df, cond)
+        self.updates(ev)
+        return ev.frame()
 
     def _apply_custom_cond(self, df: DataFrame, cond: Column) -> DataFrame:
         tag = f"__when_{next(_cond_counter)}"
@@ -128,15 +90,13 @@ class FnStage(Stage):
 
     name: str = "fn"
     updates_fn: Callable[[DataFrame], dict[str, Column]] | None = None
-    drops_fn: Callable[[DataFrame], list[str]] | None = None
     keep_fn: Callable[[DataFrame], Column] | None = None
     custom_fn: Callable[[DataFrame], DataFrame] | None = None
 
-    def updates(self, df: DataFrame) -> dict[str, Column]:
-        return self.updates_fn(df) if self.updates_fn else {}
-
-    def drops(self, df: DataFrame) -> list[str]:
-        return self.drops_fn(df) if self.drops_fn else []
+    def updates(self, ev: Event) -> None:
+        if self.updates_fn:
+            for path, value in self.updates_fn(ev.frame()).items():
+                ev.set(path, value)
 
     def keep(self, df: DataFrame) -> Column | None:
         return self.keep_fn(df) if self.keep_fn else None

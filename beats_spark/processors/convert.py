@@ -8,7 +8,7 @@ from typing import Any
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from beats_spark.event import get_path, has_path
+from beats_spark.event import Event, get_path, has_path
 from beats_spark.processors.base import Stage, register
 
 _CONVERT_TYPES = {
@@ -27,25 +27,25 @@ _IPV6 = r"^([0-9A-Fa-f]{0,4}:){2,7}[0-9A-Fa-f]{0,4}$"
 @register("convert")
 def convert(cfg: dict[str, Any]) -> Stage:
     """Cast fields (convert/convert.go:74,170-197; types config.go:60-84).
-    ``mode: copy`` keeps the source, ``rename`` moves it. ``ip`` validates
-    and keeps the string. Cast failure → null (the columnar analogue of the
-    reference's per-event error; use fail_on_error=False semantics)."""
+    ``mode: copy`` keeps the source, ``rename`` moves it (under ``when``,
+    the source is NULLed on matching rows). ``ip`` validates and keeps the
+    string. Cast failure → null (the columnar analogue of the reference's
+    per-event error; use fail_on_error=False semantics)."""
     rules = cfg.get("fields", [])
     ignore_missing = cfg.get("ignore_missing", False)
     mode = cfg.get("mode", "copy")
 
     class Convert(Stage):
-        def apply(self, df: DataFrame, cond: Column | None = None) -> DataFrame:
-            from beats_spark.event import drop_path, with_path
+        def updates(self, ev: Event) -> None:
             for r in rules:
                 src = r["from"]
                 dst = r.get("to", src)
                 typ = r.get("type", "string")
-                if not has_path(df.schema, src):
+                if not ev.has(src):
                     if ignore_missing:
                         continue
                     raise ValueError(f"convert: missing field {src!r}")
-                col = get_path(df, src)
+                col = ev.get(src)
                 if typ == "ip":
                     s = col.cast("string")
                     new = F.when(s.rlike(_IPV4) | s.rlike(_IPV6), s)
@@ -53,13 +53,9 @@ def convert(cfg: dict[str, Any]) -> Stage:
                     new = col.try_cast(_CONVERT_TYPES[typ])
                 else:
                     raise ValueError(f"convert: unknown type {typ!r}")
-                if cond is not None:
-                    old = get_path(df, dst) if has_path(df.schema, dst) else F.lit(None)
-                    new = F.when(cond, new).otherwise(old)
-                df = with_path(df, dst, new)
-                if mode == "rename" and dst != src and cond is None:
-                    df = drop_path(df, src)
-            return df
+                ev.set(dst, new)
+                if mode == "rename" and dst != src:
+                    ev.drop(src)
 
     return Convert()
 
@@ -119,13 +115,13 @@ def timestamp(cfg: dict[str, Any]) -> Stage:
                     )
             validated.append(True)
 
-        def updates(self, df: DataFrame) -> dict[str, Column]:
-            self._validate(df.sparkSession)
-            if not has_path(df.schema, fld):
+        def updates(self, ev: Event) -> None:
+            self._validate(ev.frame().sparkSession)
+            if not ev.has(fld):
                 if ignore_missing:
-                    return {}
+                    return
                 raise ValueError(f"timestamp: missing field {fld!r}")
-            src = get_path(df, fld).cast("string")
+            src = ev.get(fld).cast("string")
             attempts = []
             for lay in layouts:
                 if lay == "UNIX":
@@ -156,10 +152,9 @@ def timestamp(cfg: dict[str, Any]) -> Stage:
                             f"INTERVAL {cur - 1970} YEARS")
                     attempts.append(F.to_utc_timestamp(parsed_lay, tz))
             parsed = F.coalesce(*attempts) if attempts else F.try_to_timestamp(src)
-            if not ignore_failure:
-                return {target: parsed}
-            old = get_path(df, target) if has_path(df.schema, target) else F.lit(None).cast("timestamp")
-            return {target: F.coalesce(parsed, old)}
+            if ignore_failure:
+                parsed = F.coalesce(parsed, ev.get(target))
+            ev.set(target, parsed)
 
     return Timestamp()
 
@@ -247,12 +242,11 @@ def decode_csv_fields(cfg: dict[str, Any]) -> Stage:
     split_rx = _re.escape(sep) + r'(?=(?:[^"]*"[^"]*")*[^"]*$)'
 
     class DecodeCsv(Stage):
-        def updates(self, df: DataFrame) -> dict[str, Column]:
-            out: dict[str, Column] = {}
+        def updates(self, ev: Event) -> None:
             for src, dst in pairs.items():
-                if not has_path(df.schema, src):
+                if not ev.has(src):
                     continue
-                arr = F.split(get_path(df, src).cast("string"), split_rx)
+                arr = F.split(ev.get(src).cast("string"), split_rx)
                 if trim_leading:
                     arr = F.transform(arr, lambda v: F.regexp_replace(v, r"^ +", ""))
                 arr = F.transform(
@@ -261,7 +255,6 @@ def decode_csv_fields(cfg: dict[str, Any]) -> Stage:
                         F.regexp_replace(v, r'^"(.*)"$', "$1"), '""', '"'
                     ),
                 )
-                out[dst] = arr
-            return out
+                ev.set(dst, arr)
 
     return DecodeCsv()

@@ -29,7 +29,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql import types as T
 
-from beats_spark.event import get_path, has_path, path_type
+from beats_spark.event import Event, get_path, has_path, path_type
 from beats_spark.processors.base import Stage, register
 
 
@@ -132,9 +132,9 @@ def fingerprint(cfg: dict[str, Any]) -> Stage:
     ignore_missing = cfg.get("ignore_missing", False)
 
     class Fingerprint(Stage):
-        def updates(self, df: DataFrame) -> dict[str, Column]:
-            ser = serialize_fields(df, fields, ignore_missing)
-            return {target: hash_column(ser, method, encoding)}
+        def updates(self, ev: Event) -> None:
+            ser = serialize_fields(ev.frame(), fields, ignore_missing)
+            ev.set(target, hash_column(ser, method, encoding))
 
     return Fingerprint()
 
@@ -146,7 +146,7 @@ def add_id(cfg: dict[str, Any]) -> Stage:
     target = cfg.get("target_field", "_meta__id")
 
     class AddId(Stage):
-        def updates(self, df: DataFrame) -> dict[str, Column]:
-            return {target: F.expr("uuid()")}
+        def updates(self, ev: Event) -> None:
+            ev.set(target, F.expr("uuid()"))
 
     return AddId()

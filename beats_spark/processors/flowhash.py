@@ -139,7 +139,7 @@ def community_id(cfg: dict[str, Any]) -> Stage:
             # them that many times blows up codegen. As attribute refs the
             # downstream expressions stay tiny (CollapseProject keeps
             # expensive multi-referenced aliases staged, SPARK-36718).
-            # free-name probe (case-insensitive, like event._tmp_name): a
+            # free-name probe (case-insensitive, like with_paths' temps): a
             # user column named __cid_sp must not be overwritten-then-dropped
             names = ("proto", "sp", "dp", "sb", "db", "oneway")
             existing = {c.lower() for c in df.columns}

@@ -16,8 +16,10 @@ import re
 from typing import Any
 
 from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import types as T
 
-from beats_spark.event import append_flag, get_path, has_path
+from beats_spark.event import (Event, _quote, append_flag, get_path, has_path,
+                               path_type, set_error_message, with_path)
 from beats_spark.processors.base import Stage, register
 
 # A small built-in pattern library (public grok idiom); users can extend via
@@ -156,7 +158,6 @@ def grok(cfg: dict[str, Any]) -> Stage:
 
     class Grok(Stage):
         def apply(self, df: DataFrame, cond: Column | None = None) -> DataFrame:
-            from beats_spark.event import with_path
             if not has_path(df.schema, src):
                 raise ValueError(f"grok: field {src!r} not in schema")
             col = get_path(df, src).cast("string")
@@ -247,11 +248,13 @@ def grok(cfg: dict[str, Any]) -> Stage:
             # also keep their old value (ES writes only the winner's
             # captures)
             if target:
-                from pyspark.sql import types as T
-
-                from beats_spark.event import _quote, path_type
-
                 t_type = path_type(df.schema, target)
+                if t_type is not None and not isinstance(t_type, T.StructType):
+                    # ES leaves an existing field untouched when grok fails;
+                    # a struct column replacing it would NULL it instead
+                    raise ValueError(
+                        f"grok: target_prefix {target!r} names an existing "
+                        f"{t_type.simpleString()} field, not an object")
                 if isinstance(t_type, T.StructType):
                     # MERGE captures into the existing struct (withField):
                     # pre-existing fields no capture writes survive matched
@@ -293,8 +296,7 @@ def grok(cfg: dict[str, Any]) -> Stage:
                     payload = F.when(old.isNotNull(), merged) \
                         .otherwise(F.when(any_written, F.struct(*fresh)))
                 else:
-                    # no pre-existing struct (or a non-struct value, which
-                    # a struct column replaces): build from captures only
+                    # no pre-existing struct: build from captures only
                     payload = F.struct(*[
                         F.when(w, v).alias(n) for n, (v, w) in cols.items()])
                     any_written = F.lit(False)
@@ -303,26 +305,16 @@ def grok(cfg: dict[str, Any]) -> Stage:
                     payload = F.when(any_written, payload)
                 df = with_path(df, target, payload)
             else:
-                # batch all TOP-LEVEL fields into one projection — a
-                # with_path per field is one eager JVM analysis each
-                # (~0.1 s of driver time per field on warm sessions);
-                # nested paths still go through with_path's struct rebuild
-                flat: dict[str, Column] = {}
+                # every capture lands in one batched projection (a
+                # with_path per dotted capture cost 3 eager analyses each)
+                ev = Event(df)
                 for n, (v, w) in cols.items():
-                    prev_v = (get_path(df, n) if has_path(df.schema, n)
-                              else F.lit(None))
-                    val = F.when(w, v).otherwise(prev_v)
-                    if "." in n:
-                        df = with_path(df, n, val)
-                    else:
-                        flat[n] = val
-                if flat:
-                    df = df.withColumns(flat)
+                    ev.set(n, F.when(w, v).otherwise(ev.get(n)))
+                df = ev.frame()
             # failure is always visible in log.flags (like dissect);
             # error.message only without ignore_failure
             df = append_flag(df, "grok_parsing_error", cond=failed)
             if not ignore_failure:
-                from beats_spark.event import set_error_message
                 df = set_error_message(df, failed, "grok: no pattern matched")
             return df.drop(*flags, *xcols)
 

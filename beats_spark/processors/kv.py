@@ -47,7 +47,9 @@ from beats_spark.processors.base import Stage, register
 
 
 def _trim_chars(col: Column, chars: str) -> Column:
-    cls = "[" + re.sub(r"([\\\]^\-])", r"\\\1", chars) + "]+"
+    # every Java character-class metacharacter is escaped: \ ] ^ - plus
+    # [ (nested class union) and & (&& intersection)
+    cls = "[" + re.sub(r"([\\\[\]^\-&])", r"\\\1", chars) + "]+"
     return F.regexp_replace(F.regexp_replace(col, f"^{cls}", ""),
                             f"{cls}$", "")
 

@@ -6,13 +6,15 @@ naming, timeseries instance hash.
 from __future__ import annotations
 
 import gzip
+import re
 from typing import Any
 
 import pandas as pd
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, functions as F
 
-from beats_spark.event import get_path, has_path
+from beats_spark.event import Event
+from beats_spark.fmtstr import compile_fmtstr
 from beats_spark.processors.base import Stage, register
 
 
@@ -42,12 +44,12 @@ def decompress_gzip_field(cfg: dict[str, Any]) -> Stage:
     udf = F.pandas_udf(gunzip, returnType="string")
 
     class Gunzip(Stage):
-        def updates(self, df: DataFrame) -> dict[str, Column]:
-            if not has_path(df.schema, src):
+        def updates(self, ev: Event) -> None:
+            if not ev.has(src):
                 if ignore_missing:
-                    return {}
+                    return
                 raise ValueError(f"decompress_gzip_field: missing {src!r}")
-            return {dst: udf(get_path(df, src))}
+            ev.set(dst, udf(ev.get(src)))
 
     return Gunzip()
 
@@ -75,13 +77,13 @@ def detect_mime_type(cfg: dict[str, Any]) -> Stage:
     target = cfg.get("target", "mime_type")
 
     class Mime(Stage):
-        def updates(self, df: DataFrame) -> dict[str, Column]:
-            col = get_path(df, src)
+        def updates(self, ev: Event) -> None:
+            col = ev.get(src)
             hx = F.upper(F.hex(col.cast("binary")))
             expr: Column = F.lit(None).cast("string")
             for magic, mime in reversed(_MAGIC):
                 expr = F.when(hx.startswith(magic), F.lit(mime)).otherwise(expr)
-            return {target: expr}
+            ev.set(target, expr)
 
     return Mime()
 
@@ -93,12 +95,11 @@ def add_locale(cfg: dict[str, Any]) -> Stage:
     fmt = cfg.get("format", "offset")
 
     class Locale(Stage):
-        def updates(self, df: DataFrame) -> dict[str, Column]:
-            tz = df.sparkSession.conf.get("spark.sql.session.timeZone", "UTC")
-            if fmt == "abbreviation":
-                return {"event.timezone": F.lit(tz)}
-            off = F.date_format(F.current_timestamp(), "xxx")
-            return {"event.timezone": off}
+        def updates(self, ev: Event) -> None:
+            spark = ev.frame().sparkSession
+            tz = spark.conf.get("spark.sql.session.timeZone", "UTC")
+            ev.set("event.timezone", F.lit(tz) if fmt == "abbreviation"
+                   else F.date_format(F.current_timestamp(), "xxx"))
 
     return Locale()
 
@@ -112,15 +113,15 @@ def extract_array(cfg: dict[str, Any]) -> Stage:
     ignore_missing = cfg.get("ignore_missing", False)
 
     class ExtractArray(Stage):
-        def updates(self, df: DataFrame) -> dict[str, Column]:
-            if not has_path(df.schema, src):
+        def updates(self, ev: Event) -> None:
+            if not ev.has(src):
                 if ignore_missing:
-                    return {}
+                    return
                 raise ValueError(f"extract_array: missing {src!r}")
-            arr = get_path(df, src)
+            arr = ev.get(src)
             # element_at is 1-based; config indices are 0-based like Go
-            return {dst: F.element_at(arr, int(i) + 1)
-                    for dst, i in mappings.items()}
+            for dst, i in mappings.items():
+                ev.set(dst, F.element_at(arr, int(i) + 1))
 
     return ExtractArray()
 
@@ -134,13 +135,11 @@ def add_data_stream(cfg: dict[str, Any]) -> Stage:
     namespace = cfg.get("namespace", "default")
 
     class DataStream(Stage):
-        def updates(self, df: DataFrame) -> dict[str, Column]:
-            return {
-                "data_stream.type": F.lit(typ),
-                "data_stream.dataset": F.lit(dataset),
-                "data_stream.namespace": F.lit(namespace),
-                "_meta_raw_index": F.lit(f"{typ}-{dataset}-{namespace}"),
-            }
+        def updates(self, ev: Event) -> None:
+            ev.set("data_stream.type", F.lit(typ))
+            ev.set("data_stream.dataset", F.lit(dataset))
+            ev.set("data_stream.namespace", F.lit(namespace))
+            ev.set("_meta_raw_index", F.lit(f"{typ}-{dataset}-{namespace}"))
 
     return DataStream()
 
@@ -154,22 +153,20 @@ def add_formatted_index(cfg: dict[str, Any]) -> Stage:
     ts_field = cfg.get("ts_field", "ts")
 
     class FormattedIndex(Stage):
-        def updates(self, df: DataFrame) -> dict[str, Column]:
-            from beats_spark.fmtstr import compile_fmtstr
-            import re as _re
-
+        def updates(self, ev: Event) -> None:
+            df = ev.frame()
             expr = index
             parts: list[Column] = []
             pos = 0
-            for m in _re.finditer(r"%\{\+([^}]+)\}", expr):
+            for m in re.finditer(r"%\{\+([^}]+)\}", expr):
                 if m.start() > pos:
                     parts.append(compile_fmtstr(df, expr[pos:m.start()]))
-                parts.append(F.date_format(get_path(df, ts_field), m.group(1)))
+                parts.append(F.date_format(ev.get(ts_field), m.group(1)))
                 pos = m.end()
             if pos < len(expr):
                 parts.append(compile_fmtstr(df, expr[pos:]))
             out = parts[0] if len(parts) == 1 else F.concat(*parts)
-            return {"_meta_raw_index": out}
+            ev.set("_meta_raw_index", out)
 
     return FormattedIndex()
 
@@ -181,9 +178,9 @@ def timeseries_instance(cfg: dict[str, Any]) -> Stage:
     dims = cfg.get("fields", [])
 
     class TsInstance(Stage):
-        def updates(self, df: DataFrame) -> dict[str, Column]:
-            cols = [get_path(df, d).cast("string") for d in sorted(dims)]
-            return {"timeseries.instance": F.xxhash64(*cols)}
+        def updates(self, ev: Event) -> None:
+            cols = [ev.get(d).cast("string") for d in sorted(dims)]
+            ev.set("timeseries.instance", F.xxhash64(*cols))
 
     return TsInstance()
 
@@ -226,20 +223,21 @@ def decode_xml(cfg: dict[str, Any]) -> Stage:
     udf = F.pandas_udf(parse_batch, returnType="map<string,string>")
 
     class DecodeXml(Stage):
-        def updates(self, df: DataFrame) -> dict[str, Column]:
-            if not has_path(df.schema, src):
+        def updates(self, ev: Event) -> None:
+            if not ev.has(src):
                 if ignore_failure:
-                    return {}
+                    return
                 raise ValueError(f"decode_xml: missing {src!r}")
-            return {target: udf(get_path(df, src).cast("string"))}
+            ev.set(target, udf(ev.get(src).cast("string")))
 
     return DecodeXml()
 
 
 def _const_struct_stage(target: str, fields: dict[str, Any]) -> Stage:
     class ConstStruct(Stage):
-        def updates(self, df: DataFrame) -> dict[str, Column]:
-            return {f"{target}.{k}": F.lit(v) for k, v in fields.items()}
+        def updates(self, ev: Event) -> None:
+            for k, v in fields.items():
+                ev.set(f"{target}.{k}", F.lit(v))
 
     return ConstStruct()
 

@@ -24,9 +24,9 @@ from __future__ import annotations
 
 from typing import Any
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, functions as F
 
-from beats_spark.event import get_path, has_path
+from beats_spark.event import Event, _quote
 from beats_spark.processors.base import Stage, register
 
 # (family, regex, n_version_groups) — ordered, first match wins. Version
@@ -147,21 +147,19 @@ def user_agent(cfg: dict[str, Any]) -> Stage:
     ignore_missing = cfg.get("ignore_missing", False)
 
     class UserAgent(Stage):
-        def updates(self, df: DataFrame) -> dict[str, Column]:
-            if not has_path(df.schema, fld):
+        def updates(self, ev: Event) -> None:
+            if not ev.has(fld):
                 if ignore_missing:
-                    return {}
+                    return
                 raise ValueError(f"user_agent: missing field {fld!r}")
-            ua = get_path(df, fld).cast("string")
+            ua = ev.get(fld).cast("string")
             # the big first-match-wins chains are emitted as SQL TEXT and
             # parsed once by F.expr: building ~500 Column nodes through
             # py4j cost ~1.2 s of driver time PER APPLY (measured r5) —
             # the same rule-of-thumb as the minhash/simhash SQL-text
             # rework (BENCH.md §3). CASE WHEN order = list order = the
             # uap-core first-match-wins semantics.
-            from beats_spark.event import _quote
-
-            esc = (df.sparkSession.conf.get(
+            esc = (ev.frame().sparkSession.conf.get(
                 "spark.sql.parser.escapedStringLiterals", "false")
                 .lower() == "true")
             ua_ref = ("CAST(" + ".".join(_quote(p) for p in fld.split("."))
@@ -226,6 +224,7 @@ def user_agent(cfg: dict[str, Any]) -> Stage:
                 out[f"{target}.device.name"] = device
             if "original" in props and f"{target}.original" != fld:
                 out[f"{target}.original"] = ua
-            return out
+            for path, value in out.items():
+                ev.set(path, value)
 
     return UserAgent()

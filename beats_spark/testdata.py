@@ -217,21 +217,9 @@ TOOLS_LOOKUP = [
 ]
 TOOLS_LOOKUP_COLS = ["tool", "tool_family", "tool_cost_class", "sink_hint"]
 
-ROLES_LOOKUP = [
-    ("user", "human", True),
-    ("assistant", "model", False),
-    ("system", "control", False),
-    ("tool", "machine", False),
-]
-ROLES_LOOKUP_COLS = ["role", "role_group", "is_human"]
-
 
 def tools_lookup_df(spark: SparkSession) -> DataFrame:
     return spark.createDataFrame(TOOLS_LOOKUP, TOOLS_LOOKUP_COLS)
-
-
-def roles_lookup_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(ROLES_LOOKUP, ROLES_LOOKUP_COLS)
 
 
 def tools_lookup_sql() -> str:
@@ -240,15 +228,5 @@ def tools_lookup_sql() -> str:
     )
     return (
         f"tools_lookup(tool, tool_family, tool_cost_class, sink_hint) AS "
-        f"(SELECT * FROM (VALUES {rows}))"
-    )
-
-
-def roles_lookup_sql() -> str:
-    rows = ", ".join(
-        f"('{r}', '{g}', {str(h).upper()})" for r, g, h in ROLES_LOOKUP
-    )
-    return (
-        f"roles_lookup(role, role_group, is_human) AS "
         f"(SELECT * FROM (VALUES {rows}))"
     )

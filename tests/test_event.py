@@ -135,17 +135,26 @@ def test_with_paths_all_null_root_stays_null(spark):
     assert out["s"] == "x"
 
 
-def test_with_paths_prefix_overlap_falls_back_sequential(spark):
+def test_event_prefix_overlap_applies_in_order(spark):
     """A root written both wholly and per-field is order-dependent — the
-    batched form must defer to the exact sequential loop."""
-    from beats_spark.event import with_paths
+    overlay applies the whole-root write before the per-field one, and
+    with_paths itself refuses the overlapping batch."""
+    import pytest
+
+    from beats_spark.event import Event, with_paths
 
     df = spark.createDataFrame([(1,)], "n int")
-    out = with_paths(df, {
+    ups = {
         "r": F.struct(F.lit("a").alias("a"), F.lit("b").alias("b")),
         "r.a": F.lit("A"),
-    }).collect()[0]
+    }
+    ev = Event(df)
+    for path, value in ups.items():
+        ev.set(path, value)
+    out = ev.frame().collect()[0]
     assert out["r"].asDict() == {"a": "A", "b": "b"}
+    with pytest.raises(ValueError, match="overlaps"):
+        with_paths(df, ups)
 
 
 def test_with_paths_temp_collision_with_target_and_column(spark):
@@ -168,8 +177,8 @@ def test_with_paths_temp_collision_with_target_and_column(spark):
 
 def test_copy_fields_chained_pairs_read_own_writes(spark):
     """filebeat copies pairs sequentially per event: a later pair reading
-    an earlier pair's target gets the NEW value (chained driver-side since
-    with_paths values resolve against the input frame)."""
+    an earlier pair's target gets the NEW value (the Event overlay returns
+    the pending write for a path written earlier in the stage)."""
     from beats_spark.processors import apply_chain, build_chain
 
     df = spark.createDataFrame([("v", "stale")], "a string, b string")

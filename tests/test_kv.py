@@ -79,6 +79,25 @@ def test_kv_trim_value(spark):
     assert r["kv"] == {"a": "1", "b": "2"}
 
 
+def test_kv_trim_every_ascii_punctuation(spark):
+    """Each ASCII punctuation character, as trim_key and as trim_value,
+    trims exactly that character from both ends and never breaks the Java
+    character class (``[``, ``&``, ``\\``, ``]``, ``^``, ``-`` are class
+    metacharacters there)."""
+    import string
+
+    chars = string.punctuation
+    df = spark.createDataFrame(
+        [tuple(f"{c}{c}k{c}x{c}\t{c}v{c}y{c}" for c in chars)],
+        ", ".join(f"t{i} string" for i in range(len(chars))))
+    chain = [{"kv": {"field": f"t{i}", "field_split": " ",
+                     "value_split": "\t", "trim_key": c, "trim_value": c,
+                     "target": f"kv{i}"}} for i, c in enumerate(chars)]
+    row = apply_chain(df, build_chain(chain)).collect()[0]
+    for i, c in enumerate(chars):
+        assert row[f"kv{i}"] == {f"k{c}x": f"v{c}y"}, c
+
+
 def test_kv_repeated_key_first_wins(spark):
     """Documented divergence: ES appends repeats into an array; a
     map<string,string> keeps the FIRST occurrence."""

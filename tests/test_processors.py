@@ -1159,3 +1159,68 @@ def test_rate_limit_null_ts_passes_through(spark):
     ).collect()
     assert sum(1 for r in out if r["ts"] is not None) == 5
     assert sum(1 for r in out if r["ts"] is None) == 7
+
+
+# ---------------------------------------------------------------------------
+# chained rules: each rule of a ``fields`` list sees the earlier rules' writes
+# (the reference applies them in order per event)
+
+def test_urldecode_chained_rules_read_earlier_writes(spark):
+    out = run(
+        spark, [("a%2541", "stale")], "a string, b string",
+        [{"urldecode": {"fields": [{"from": "a", "to": "b"},
+                                   {"from": "b", "to": "c"}]}}],
+    ).collect()[0]
+    assert out["b"] == "a%41"
+    assert out["c"] == "aA"  # decode(decode(a)), not decode('stale')
+
+
+def test_replace_two_rules_on_one_field_apply_both(spark):
+    out = run(
+        spark, [("aXbY",)], "s string",
+        [{"replace": {"fields": [
+            {"field": "s", "pattern": "X", "replacement": "-"},
+            {"field": "s", "pattern": "Y", "replacement": "+"}]}}],
+    ).collect()[0]
+    assert out["s"] == "a-b+"
+
+
+def test_chained_rules_under_when_change_only_matched_rows(spark):
+    out = run(
+        spark, [("a%2541", "stale", "aXbY", "x"),
+                ("a%2541", "stale", "aXbY", "y")],
+        "a string, b string, s string, k string",
+        [{"urldecode": {"fields": [{"from": "a", "to": "b"},
+                                   {"from": "b", "to": "c"}],
+                        "when": {"equals": {"k": "x"}}}},
+         {"replace": {"fields": [
+             {"field": "s", "pattern": "X", "replacement": "-"},
+             {"field": "s", "pattern": "Y", "replacement": "+"}],
+             "when": {"equals": {"k": "x"}}}}],
+    ).orderBy("k").collect()
+    hit, miss = out
+    assert (hit["b"], hit["c"], hit["s"]) == ("a%41", "aA", "a-b+")
+    assert (miss["b"], miss["c"], miss["s"]) == ("stale", None, "aXbY")
+
+
+def test_convert_rename_under_when_nulls_source_on_matched_rows(spark):
+    out = run(
+        spark, [("5", "x"), ("6", "y")], "n string, k string",
+        [{"convert": {"fields": [{"from": "n", "to": "m", "type": "integer"}],
+                      "mode": "rename",
+                      "when": {"equals": {"k": "x"}}}}],
+    ).orderBy("k").collect()
+    hit, miss = out
+    assert (hit["m"], hit["n"]) == (5, None)
+    assert (miss["m"], miss["n"]) == (None, "6")
+
+
+def test_grok_target_prefix_on_non_struct_field_raises(spark):
+    """A struct target would replace the existing scalar and NULL it on
+    unmatched rows, where ES leaves the field untouched: refuse at plan
+    time, naming the field and its type."""
+    with pytest.raises(ValueError, match=r"'t'.*string"):
+        run(spark, [("id=7", "keep"), ("miss", "keep")],
+            "text string, t string",
+            [{"grok": {"pattern": "id=%{INT:id}", "field": "text",
+                       "target_prefix": "t"}}])
