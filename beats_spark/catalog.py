@@ -11,6 +11,12 @@ log per table:
     warehouse/<table>/data/<snapshot_id>/part-*.parquet
     warehouse/<table>/_snapshots.jsonl     # one JSON line per commit
 
+Three writers fill a snapshot dir: ``append`` (a Spark parquet write of a
+DataFrame), ``adopt_directory`` (a rename of an already-written dir) and
+``append_rows`` (a handful of driver-side rows written by pyarrow as one
+``part-00000-<uuid>.parquet`` file, no Spark job — the run's metrics and
+lineage commits, like the registrar writing its own small state file).
+
 A snapshot becomes visible only when its manifest line lands in the log
 (write-then-publish, like Iceberg's metadata swap), reads union only
 committed snapshot dirs, and incremental reads select snapshot ranges —
@@ -29,7 +35,11 @@ import time
 import uuid
 from dataclasses import dataclass
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 
 @dataclass
@@ -98,6 +108,23 @@ class ParquetCatalog:
         sid = self.new_snapshot_id(table)
         path = os.path.join(self._table_dir(table), "data", sid)
         df.write.mode("errorifexists").parquet(path)
+        return self._commit(table, sid, path, run_id)
+
+    def append_rows(self, rows: list[tuple], schema: StructType, table: str,
+                    run_id: str | None = None) -> Snapshot:
+        """Publish driver-side ``rows`` (tuples in ``schema`` order) as a new
+        snapshot of one parquet file, written by pyarrow — no Spark job.
+        Same layout and publish point as ``append``: a crash before the log
+        line leaves only an unreferenced data dir."""
+        arrow_schema = to_arrow_schema(schema)
+        # column-wise: a row of the wrong width or a value of the wrong type
+        # raises here, as createDataFrame's verification would
+        cols = list(zip(*rows, strict=True)) or [()] * len(arrow_schema)
+        data = pa.Table.from_arrays(cols, schema=arrow_schema)
+        sid = self.new_snapshot_id(table)
+        path = os.path.join(self._table_dir(table), "data", sid)
+        os.makedirs(path)
+        pq.write_table(data, os.path.join(path, f"part-00000-{uuid.uuid4()}.parquet"))
         return self._commit(table, sid, path, run_id)
 
     def adopt_directory(self, src_dir: str, table: str,

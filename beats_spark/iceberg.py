@@ -1,8 +1,8 @@
 """IcebergCatalog: the production catalog behind the same contract as
-``ParquetCatalog`` (catalog.py) — append / adopt_directory / read /
-read_since / snapshots / rollback_run / incomplete_runs — expressed over a
-real Iceberg Spark catalog (``spark.sql.catalog.<name>`` with the Iceberg
-runtime jar on the classpath).
+``ParquetCatalog`` (catalog.py) — append / append_rows / adopt_directory /
+read / read_since / snapshots / rollback_run / incomplete_runs — expressed
+over a real Iceberg Spark catalog (``spark.sql.catalog.<name>`` with the
+Iceberg runtime jar on the classpath).
 
 The reference's registrar offset checkpoint (filebeat/registrar/
 registrar.go:35,139,194) maps to Iceberg snapshot lineage exactly as in
@@ -25,6 +25,7 @@ import uuid
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 @dataclass
@@ -363,6 +364,11 @@ class IcebergCatalog:
         snap = self.latest_snapshot(table)
         assert snap is not None
         return snap
+
+    def append_rows(self, rows: list[tuple], schema: StructType, table: str,
+                    run_id: str | None = None) -> IcebergSnapshot:
+        # an Iceberg commit is a Spark write either way
+        return self.append(self.spark.createDataFrame(rows, schema), table, run_id)
 
     def adopt_directory(self, src_dir: str, table: str,
                         run_id: str | None = None) -> IcebergSnapshot:

@@ -9,14 +9,19 @@ with one declarative Spark job:
       → salted repartition on hot conv_ids      # skew control
       → _sink column (outil.Selector, first-match-wins)
       → ONE partitioned write, per-sink dirs adopted as table snapshots
-      → metrics + lineage commit                # monitoring.go counters
+      → metrics + lineage commit                # monitoring.go counters,
+                                                # driver-side, no Spark job
 
 Fan-out is single-pass: the reference publishes each batch once to one output
 (load-balanced), we write each row once via ``partitionBy(_sink)`` — no
 per-sink re-scan of the transformed frame. Metrics re-aggregate the *written*
 parquet (cheap columnar count) so reported counts are what actually landed,
 not what the plan promised — the analogue of ack-based counters
-(pipeline/monitoring.go:92-104: events.total/filtered/published).
+(pipeline/monitoring.go:92-104: events.total/filtered/published). The few
+metrics rows and the lineage row are built on the driver and committed with
+``append_rows`` (one pyarrow-written file each, no Spark job), the way the
+registrar writes its own small state file instead of shipping it through the
+event pipeline.
 
 Exactly-once resume: each processed source snapshot id is recorded in the
 ``lineage`` table inside the same run; a re-run sees it and skips — the
@@ -43,6 +48,23 @@ from beats_spark.selector import compile_selector
 DEAD_LETTER = "dead_letter"
 METRICS_TABLE = "pipeline_metrics"
 LINEAGE_TABLE = "lineage"
+
+# spelled out rather than parsed from DDL: DataType.fromDDL needs a live
+# SparkContext, and this module is imported before any session exists
+METRICS_SCHEMA = T.StructType([
+    T.StructField("run_id", T.StringType()),
+    T.StructField("partition_id", T.IntegerType()),
+    T.StructField("sink", T.StringType()),
+    T.StructField("events_in", T.LongType()),
+    T.StructField("events_dropped", T.LongType()),
+    T.StructField("events_routed", T.LongType()),
+])
+LINEAGE_SCHEMA = T.StructType([
+    T.StructField("run_id", T.StringType()),
+    T.StructField("source_table", T.StringType()),
+    T.StructField("snapshot_id", T.StringType()),
+    T.StructField("committed_at", T.DoubleType()),
+])
 
 # characters Spark escapes in partition directory names
 # (ExternalCatalogUtils.charToEscape) — adoption must look up the ESCAPED dir
@@ -161,19 +183,12 @@ class Pipeline:
 
         routed = self.transform(df)
         # PySpark Observation captures only the FIRST action touching its
-        # node. Stages with plan-time sampling (schema-less
-        # decode_json_fields, timestamp sample validation) run a
-        # limit(1)-style collect DURING transform() — on the observed
-        # lineage — which would freeze events_in at the sample job's
-        # partial count. Detect consumption (non-blocking probe) and fall
-        # back to an explicit count job: only configs with sampling
-        # stages pay the second scan.
-        try:
-            # getRowOrEmpty returns a scala Option (py4j does NOT map its
-            # None$ to Python None — probe .isEmpty(), not `is None`)
-            obs_consumed = not obs._jo.getRowOrEmpty().isEmpty()
-        except Exception:
-            obs_consumed = True  # can't prove it's clean → pay the scan
+        # node. A stage that samples its input at plan time (Stage.samples:
+        # schema-less decode_json_fields) runs a limit(1) collect DURING
+        # transform() — on the observed lineage — which would freeze
+        # events_in at the sample job's partial count. Only such configs
+        # pay an explicit count job (a second scan).
+        sampled = any(st.samples for st in self.stages)
         payload_cols = [c for c in routed.columns if not c.startswith(META_PREFIX)]
         routed = routed.select(*payload_cols)
         if self.config.cluster_by:
@@ -207,7 +222,7 @@ class Pipeline:
             sink_counts[s] = sink_counts.get(s, 0) + c
             metrics_rows.append((run_id, int(p) if p is not None else -1, s, 0, 0, c))
         # the staging write has run, so the observed metric is available now
-        events_in = (int(df.count()) if obs_consumed
+        events_in = (int(df.count()) if sampled
                      else int(obs.get["events_in"]))
         events_routed_total = sum(sink_counts.values())
         metrics_rows.append(
@@ -222,25 +237,18 @@ class Pipeline:
         # leftover staging dir (only _SUCCESS marker remains) is removed
         shutil.rmtree(staging, ignore_errors=True)
 
-        metrics_df = self.spark.createDataFrame(
-            metrics_rows,
-            "run_id string, partition_id int, sink string, "
-            "events_in long, events_dropped long, events_routed long",
-        )
-        cat.append(metrics_df, METRICS_TABLE, run_id=run_id)
+        cat.append_rows(metrics_rows, METRICS_SCHEMA, METRICS_TABLE, run_id=run_id)
 
         # lineage is committed for EVERY run (a direct run(df) gets one row
         # with a NULL snapshot_id): the lineage commit is the run's "completed"
         # marker, so incomplete_runs()/rollback would otherwise misclassify
         # every direct run as crashed and delete validly committed sink data
         snaps = source_snapshots or []
-        lineage_df = self.spark.createDataFrame(
-            [(run_id, source_table, s, float(time.time())) for s in snaps]
-            or [(run_id, source_table, None, float(time.time()))],
-            "run_id string, source_table string, snapshot_id string, "
-            "committed_at double",
+        now = time.time()
+        cat.append_rows(
+            [(run_id, source_table, s, now) for s in snaps or [None]],
+            LINEAGE_SCHEMA, LINEAGE_TABLE, run_id=run_id,
         )
-        cat.append(lineage_df, LINEAGE_TABLE, run_id=run_id)
 
         return RunResult(
             run_id=run_id,

@@ -41,6 +41,10 @@ class Stage:
     """Base processor stage. Subclasses override one shape."""
 
     name = "stage"
+    # True when building the plan runs an action on the stage's input (a
+    # limit(1) schema sample): that action consumes a df.observe on the
+    # same lineage, so Pipeline.run must count the input itself
+    samples = False
 
     def updates(self, ev: Event) -> None:
         pass
@@ -114,6 +118,10 @@ class WhenStage(Stage):
     when_cfg: dict[str, Any] = field(default_factory=dict)
     name = "when"
 
+    @property
+    def samples(self) -> bool:
+        return self.inner.samples
+
     def apply(self, df: DataFrame, cond: Column | None = None) -> DataFrame:
         c = compile_condition(df, self.when_cfg)
         if cond is not None:
@@ -134,6 +142,10 @@ class IfThenElseStage(Stage):
     then_stages: list[Stage] = field(default_factory=list)
     else_stages: list[Stage] = field(default_factory=list)
     name = "if"
+
+    @property
+    def samples(self) -> bool:
+        return any(st.samples for st in self.then_stages + self.else_stages)
 
     def apply(self, df: DataFrame, cond: Column | None = None) -> DataFrame:
         tag = f"__if_{next(_cond_counter)}"

@@ -172,6 +172,8 @@ def decode_json_fields(cfg: dict[str, Any]) -> Stage:
     add_error_key = cfg.get("add_error_key", False)
 
     class DecodeJson(Stage):
+        samples = not schema_ddl
+
         def apply(self, df: DataFrame, cond: Column | None = None) -> DataFrame:
             from beats_spark.event import with_path
             for fld in fields:

@@ -32,9 +32,9 @@ def script(cfg: dict[str, Any]) -> Stage:
         def custom(self, df: DataFrame) -> DataFrame:
             out_schema = schema_ddl or df.schema
             if isinstance(schema_ddl, str):
-                from pyspark.sql.types import _parse_datatype_string
+                from pyspark.sql.types import DataType
 
-                out_cols = _parse_datatype_string(schema_ddl).fieldNames()
+                out_cols = DataType.fromDDL(schema_ddl).fieldNames()
             else:
                 out_cols = [f.name for f in df.schema.fields]
 

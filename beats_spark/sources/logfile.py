@@ -149,9 +149,9 @@ def read_log_files(
         bad = F.col("__jfull.__corrupt").isNotNull()
         # real DDL parser: naive comma/space splitting breaks on any
         # nested or parameterized type (map<string,int>, decimal(10,2))
-        from pyspark.sql.types import _parse_datatype_string
+        from pyspark.sql.types import DataType
 
-        names = _parse_datatype_string(schema).fieldNames()
+        names = DataType.fromDDL(schema).fieldNames()
         clean = F.when(
             ~bad,
             F.struct(*[F.col(f"__jfull.{n}").alias(n) for n in names]),

@@ -104,18 +104,18 @@ def test_streaming_replay_after_partial_commit_is_exactly_once(spark, tmp_path):
     import hashlib as _hl
     ckpt = str(tmp_path / "ckpt")
     rid0 = f"stream-{_hl.sha256(ckpt.encode()).hexdigest()[:8]}-00000000"
-    real_append = cat.append
+    real_append = cat.append_rows
 
-    def dying_append(df, table, run_id=None):
+    def dying_append(rows, schema, table, run_id=None):
         if table == LINEAGE_TABLE:
             raise RuntimeError("crash before lineage commit")
-        return real_append(df, table, run_id=run_id)
+        return real_append(rows, schema, table, run_id=run_id)
 
-    cat.append = dying_append
+    cat.append_rows = dying_append
     with pytest.raises(RuntimeError):
         pipe.run(tdf, run_id=rid0,
                  source_snapshots=[rid0], source_table="_stream")
-    cat.append = real_append
+    cat.append_rows = real_append
     orphans = sum(cat.read(s).count() for s in cat.tables()
                   if s.startswith("sink_"))
     assert orphans > 0  # partial data exists
@@ -160,22 +160,22 @@ def test_streaming_soak_crash_restart_exactly_once(spark, tmp_path):
     # crash exactly once, on the THIRD batch's lineage commit (the sinks
     # for that batch are already adopted at that point)
     lineage_appends = [0]
-    real_append = cat.append
+    real_append = cat.append_rows
 
-    def dying_append(df, table, run_id=None):
+    def dying_append(rows, schema, table, run_id=None):
         if table == LINEAGE_TABLE:
             lineage_appends[0] += 1
             if lineage_appends[0] == 3:
                 raise RuntimeError("induced crash before lineage commit")
-        return real_append(df, table, run_id=run_id)
+        return real_append(rows, schema, table, run_id=run_id)
 
-    cat.append = dying_append
+    cat.append_rows = dying_append
     q = run_stream(pipe, stream_df(), checkpoint=ckpt)
     with pytest.raises(Exception):
         q.awaitTermination(180)
         if q.exception() is not None:
             raise RuntimeError(q.exception().desc)
-    cat.append = real_append
+    cat.append_rows = real_append
 
     # two batches committed, one partial
     committed = {r["run_id"] for r in cat.read(LINEAGE_TABLE)

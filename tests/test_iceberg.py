@@ -146,6 +146,28 @@ def _recovery_catalog(monkeypatch, intents, snaps):
     return cat
 
 
+def test_append_rows_hands_append_one_dataframe(spark, monkeypatch):
+    """IcebergCatalog.append_rows is createDataFrame + append: the rows,
+    schema, table and run_id reach append unchanged, in one DataFrame."""
+    from pyspark.sql import types as T
+
+    cat = _recovery_catalog(monkeypatch, {}, [])
+    cat.spark = spark
+    calls = []
+    monkeypatch.setattr(
+        IcebergCatalog, "append",
+        lambda self, df, table, run_id=None: calls.append((df, table, run_id)))
+    schema = T.StructType([T.StructField("run_id", T.StringType()),
+                           T.StructField("n", T.LongType(), False)])
+    rows = [("r1", 3), (None, 4)]
+    cat.append_rows(rows, schema, "pipeline_metrics", run_id="r1")
+    assert len(calls) == 1
+    df, table, run_id = calls[0]
+    assert (table, run_id) == ("pipeline_metrics", "r1")
+    assert df.schema == schema
+    assert [tuple(r) for r in df.collect()] == rows
+
+
 def test_resolve_intent_attributes_mid_chain_orphan(monkeypatch):
     """A commit landing AFTER the crashed add_files leaves the orphan
     mid-chain; recovery must still find and attribute it (tail-only

@@ -3,14 +3,18 @@ text equality under (conv_id, turn_idx) ordering, and checkpoint/resume
 idempotence (the FIXTURES.md §4/§5 golden flow)."""
 
 import re
+import time
 
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType
 
 from beats_spark.catalog import ParquetCatalog
 from beats_spark.pipeline import (
+    LINEAGE_SCHEMA,
     LINEAGE_TABLE,
+    METRICS_SCHEMA,
     METRICS_TABLE,
     Pipeline,
     PipelineConfig,
@@ -187,19 +191,19 @@ def test_crash_recovery_rollback(spark, transcripts, tmp_path):
     pipe = Pipeline(spark, fixture_config(), cat)
 
     # simulate the crash: run the fan-out but strip the lineage commit
-    real_append = cat.append
+    real_append = cat.append_rows
 
-    def dying_append(df, table, run_id=None):
+    def dying_append(rows, schema, table, run_id=None):
         if table == LINEAGE_TABLE:
             raise RuntimeError("crash before lineage commit")
-        return real_append(df, table, run_id=run_id)
+        return real_append(rows, schema, table, run_id=run_id)
 
-    cat.append = dying_append
+    cat.append_rows = dying_append
     src_snap = cat.snapshots("transcripts")[0].snapshot_id
     with pytest.raises(RuntimeError):
         pipe.run(cat.read("transcripts"), run_id="crashed",
                  source_snapshots=[src_snap])
-    cat.append = real_append
+    cat.append_rows = real_append
 
     # sinks hold the orphan data; lineage does not know the run
     assert "crashed" in cat.incomplete_runs()
@@ -345,18 +349,18 @@ def test_run_incremental_rolls_back_crashed_run(spark, transcripts, tmp_path):
     pipe = Pipeline(spark, fixture_config(), cat)
     src_snap = cat.snapshots("transcripts")[0].snapshot_id
 
-    real_append = cat.append
+    real_append = cat.append_rows
 
-    def dying_append(df, table, run_id=None):
+    def dying_append(rows, schema, table, run_id=None):
         if table == LINEAGE_TABLE:
             raise RuntimeError("crash before lineage commit")
-        return real_append(df, table, run_id=run_id)
+        return real_append(rows, schema, table, run_id=run_id)
 
-    cat.append = dying_append
+    cat.append_rows = dying_append
     with pytest.raises(RuntimeError):
         pipe.run(cat.read("transcripts"), run_id="crashed",
                  source_snapshots=[src_snap])
-    cat.append = real_append
+    cat.append_rows = real_append
 
     r = pipe.run_incremental("transcripts", run_id="retry")
     want = oracle_routes(transcripts.toPandas()).value_counts().to_dict()
@@ -416,6 +420,112 @@ def test_events_in_correct_with_plan_time_sampling_stage(spark, transcripts,
     n = transcripts.count()
     assert res.events_in == n
     assert sum(res.sinks.values()) + res.events_dropped == n
+
+
+def test_events_in_correct_with_sampling_stage_nested_under_if(
+        spark, transcripts, tmp_path):
+    """The sampling flag propagates through wrappers: a schema-less
+    decode_json_fields under if/then still consumes the observation at plan
+    time, so run() must still fall back to a real count."""
+    src = transcripts.withColumn(
+        "raw", F.concat(F.lit('{"k":'), F.col("turn_idx").cast("string"),
+                        F.lit("}")))
+    cfg = PipelineConfig(
+        processors=[
+            {"if": {"has_fields": ["raw"]},
+             "then": [{"decode_json_fields": {"fields": ["raw"]}}]},
+            {"drop_event": {"when": {"equals": {"role": "system"}}}},
+        ],
+        routes=[{"sink": "s_%{[tool]}"}],
+    )
+    cat = ParquetCatalog(spark, str(tmp_path / "wh"))
+    pipe = Pipeline(spark, cfg, cat)
+    assert pipe.stages[0].samples
+    res = pipe.run(src, run_id="nested")
+    n = transcripts.count()
+    assert res.events_in == n
+    assert sum(res.sinks.values()) + res.events_dropped == n
+
+
+def test_stage_samples_flag():
+    from beats_spark.processors import build_chain
+
+    def flags(cfg):
+        return [st.samples for st in build_chain(cfg)]
+
+    json_free = {"decode_json_fields": {"fields": ["raw"]}}
+    json_typed = {"decode_json_fields": {"fields": ["raw"],
+                                         "schema": "k int"}}
+    assert flags([json_free, json_typed, {"add_tags": {"tags": ["x"]}}]) == [
+        True, False, False]
+    when = {"decode_json_fields": {"fields": ["raw"],
+                                   "when": {"has_fields": ["raw"]}}}
+    assert flags([when]) == [True]
+    assert flags([{"if": {"has_fields": ["a"]}, "then": [json_typed],
+                   "else": [json_free]}]) == [True]
+    assert flags([{"if": {"has_fields": ["a"]}, "then": [json_typed]}]) == [
+        False]
+    assert not any(st.samples for st in build_chain(fixture_config().processors))
+
+
+def test_commit_tables_keep_declared_schema(spark, transcripts, tmp_path):
+    """The driver-side commit writes exactly the schemas the old
+    createDataFrame(DDL) path declared, nullability included, and a direct
+    run(df)'s lineage row keeps its NULL snapshot_id."""
+    assert METRICS_SCHEMA == DataType.fromDDL(
+        "run_id string, partition_id int, sink string, "
+        "events_in long, events_dropped long, events_routed long")
+    assert LINEAGE_SCHEMA == DataType.fromDDL(
+        "run_id string, source_table string, snapshot_id string, "
+        "committed_at double")
+    cat = ParquetCatalog(spark, str(tmp_path / "wh"))
+    Pipeline(spark, fixture_config(), cat).run(transcripts, run_id="direct")
+    assert cat.read(METRICS_TABLE).schema == METRICS_SCHEMA
+    lineage = cat.read(LINEAGE_TABLE)
+    assert lineage.schema == LINEAGE_SCHEMA
+    (row,) = lineage.collect()
+    assert (row["run_id"], row["source_table"], row["snapshot_id"]) == (
+        "direct", "transcripts", None)
+    assert isinstance(row["committed_at"], float)
+
+
+def test_append_rows_reads_back_with_spark_written_snapshots(spark, tmp_path):
+    """A warehouse whose metrics were written by a Spark job (before the
+    driver-side commit) reads back together with append_rows snapshots."""
+    cat = ParquetCatalog(spark, str(tmp_path / "wh"))
+    old = [("r1", 0, "sink_a", 0, 0, 5), ("r1", -1, None, 7, 2, 0)]
+    new = [("r2", 3, "sink_b", 0, 0, 4), ("r2", -1, None, 4, 0, 0)]
+    cat.append(spark.createDataFrame(old, METRICS_SCHEMA), METRICS_TABLE,
+               run_id="r1")
+    cat.append_rows(new, METRICS_SCHEMA, METRICS_TABLE, run_id="r2")
+    got = cat.read(METRICS_TABLE)
+    assert got.schema == METRICS_SCHEMA
+    assert sorted(map(tuple, got.collect()), key=repr) == sorted(
+        old + new, key=repr)
+    assert [s.run_id for s in cat.snapshots(METRICS_TABLE)] == ["r1", "r2"]
+
+
+def test_append_rows_starts_no_spark_job(spark, tmp_path):
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    cat = ParquetCatalog(spark, str(tmp_path / "wh"))
+    rows = [("r", "t", None, 1.0)]
+    try:
+        sc.setJobGroup("append_rows_probe", "append_rows")
+        cat.append_rows(rows, LINEAGE_SCHEMA, LINEAGE_TABLE, run_id="r")
+        # control: a Spark write under a second group. Job events reach the
+        # status tracker in order, so once the control's jobs show up any
+        # job append_rows had started would have shown up too.
+        sc.setJobGroup("append_probe", "append")
+        cat.append(spark.createDataFrame(rows, LINEAGE_SCHEMA), LINEAGE_TABLE)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    deadline = time.time() + 30
+    while not tracker.getJobIdsForGroup("append_probe"):
+        assert time.time() < deadline, "control write's jobs never registered"
+        time.sleep(0.1)
+    assert list(tracker.getJobIdsForGroup("append_rows_probe")) == []
+    assert cat.read(LINEAGE_TABLE).count() == 2
 
 
 def test_catalog_read_unknown_snapshot_raises(spark, transcripts, tmp_path):

@@ -175,3 +175,21 @@ def test_minhash_candidates_checkpointed_no_python(spark):
     # it must not have changed the cache-manager state it found
     assert jvm_cache.isEmpty() == was_empty
     pairs.count()
+
+
+def test_library_calls_no_private_pyspark_api():
+    """The library reaches Spark only through public API: a private
+    handle (``._jo``, ``._jdf``, ``._jsc``, ``._jvm``) or a private helper
+    can be renamed in any release and quietly change behaviour."""
+    import pathlib
+    import re
+
+    root = pathlib.Path(__file__).resolve().parent.parent / "beats_spark"
+    private = re.compile(r"\._(jo|jdf|jsc|jvm)\b|_parse_datatype_string")
+    hits = [
+        f"{path.relative_to(root)}:{n}: {line.strip()}"
+        for path in sorted(root.rglob("*.py"))
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if private.search(line)
+    ]
+    assert hits == []
