@@ -26,9 +26,24 @@ segment-prefix relation to a recorded write (``a`` vs ``a.b``), a
 ``type`` of a recorded path, and an unconditional ``drop`` apply the
 recorded writes first (a flush). Use a value read through the overlay in
 the next ``set``: a later read may flush.
+
+``stage(*values)`` lands intermediate values (a regex match flag, a UDF
+result) as temp columns in one ``withColumns`` and returns attribute refs,
+so an expensive subtree referenced many times is evaluated once; it never
+flushes and ignores ``cond``, and ``frame()`` drops the temps. One
+allocator names every temp (``stage``'s, the flush's and
+:func:`with_paths`'), avoiding existing columns and pending roots
+case-insensitively, so a user column is never claimed or dropped.
+
+Parse stages report failure through :func:`append_flag` (``log.flags``)
+and :func:`set_error_message` (``error.message``); both take the Event,
+so the flag and the error land in the stage's one batch.
 """
 
 from __future__ import annotations
+
+import itertools
+from typing import Iterator
 
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql import types as T
@@ -89,6 +104,15 @@ def _fresh_tree(tree: dict) -> Column:
     ])
 
 
+def _free_names(df: DataFrame, roots, prefix: str) -> Iterator[str]:
+    """Temp names ``{prefix}{i}__`` that equal (ignoring case, like Spark's
+    resolver) no column of ``df`` and none of ``roots``."""
+    taken = {c.lower() for c in df.columns} | {r.lower() for r in roots}
+    for i in itertools.count():
+        if f"{prefix}{i}__" not in taken:
+            yield f"{prefix}{i}__"
+
+
 def _leaf_values(tree: dict) -> list[Column]:
     out: list[Column] = []
     for sub in tree.values():
@@ -135,10 +159,10 @@ def with_path(df: DataFrame, path: str, value: Column) -> DataFrame:
 def with_paths(df: DataFrame, updates: dict[str, Column]) -> DataFrame:
     """Set several (possibly nested) fields in one batch. Top-level targets
     go straight into one ``withColumns``. Nested values are first staged as
-    temp columns (one projection), then every touched root is rebuilt from
-    those cheap attribute refs (a second), then the temps are dropped: 3
-    eager plan analyses for the whole batch, 1 when every target is
-    top-level. Staging keeps codegen small: the rebuild references each
+    temp columns (in that same projection), then every touched root is
+    rebuilt from those cheap attribute refs (a second), then the temps are
+    dropped: 3 eager plan analyses for the whole batch, 1 when every target
+    is top-level. Staging keeps codegen small: the rebuild references each
     value at every nesting level, and CollapseProject (SPARK-36718) does
     not re-inline an expensive multi-referenced alias.
 
@@ -162,26 +186,29 @@ def with_paths(df: DataFrame, updates: dict[str, Column]) -> DataFrame:
 
     # temp names avoid existing columns AND the target roots: a user column
     # literally named __wpN__ must be neither claimed nor dropped
-    taken = {c.lower() for c in df.columns} | {r.lower() for r in trees}
+    free = _free_names(df, trees, "__wp")
     temps: dict[str, Column] = {}
-    i = 0
 
     def stage(tree):
-        nonlocal i
         if isinstance(tree, dict):
             return {k: stage(v) for k, v in tree.items()}
-        while f"__wp{i}__" in taken:
-            i += 1
-        name = f"__wp{i}__"
-        i += 1
+        name = next(free)
         temps[name] = tree
         return F.col(name)
 
+    # top-level values, and placeholders keeping new roots in write order,
+    # share the temps' projection: an expression common to a top-level
+    # value and a staged leaf (a parse stage's match flag feeds both its
+    # target and log.flags) is then evaluated once per row by codegen's
+    # subexpression elimination
+    first: dict[str, Column] = {}
     roots: dict[str, Column] = {}
     for root, tree in trees.items():
         if not isinstance(tree, dict):
-            roots[root] = tree
+            first[root] = tree
             continue
+        if root not in df.columns:
+            first[root] = F.lit(None)
         refs = stage(tree)
         root_t = df.schema[root].dataType if root in df.columns else None
         if isinstance(root_t, T.StructType):
@@ -192,8 +219,8 @@ def with_paths(df: DataFrame, updates: dict[str, Column]) -> DataFrame:
             roots[root] = F.when(_all_null(_leaf_values(refs)), F.lit(None)
                                  ).otherwise(_fresh_tree(refs))
     if not temps:
-        return df.withColumns(roots)
-    return df.withColumns(temps).withColumns(roots).drop(*temps)
+        return df.withColumns(first)
+    return df.withColumns({**temps, **first}).withColumns(roots).drop(*temps)
 
 
 def drop_path(df: DataFrame, path: str) -> DataFrame:
@@ -228,8 +255,23 @@ class Event:
     def __init__(self, df: DataFrame, cond: Column | None = None):
         self._df = df
         self._cond = cond
+        self._cond_pinned = cond is None
         self._pending: dict[str, Column] = {}
         self._temps: list[str] = []
+
+    def _alloc(self, roots, n: int) -> list[str]:
+        roots = [split_path(p)[0] for p in roots]
+        names = list(itertools.islice(_free_names(self._df, roots, "__ev"), n))
+        self._temps += names
+        return names
+
+    def stage(self, *values: Column) -> list[Column]:
+        """Land ``values`` as temp columns in ONE ``withColumns`` and return
+        their attribute refs: no flush, no ``cond`` wrapping; ``frame()``
+        drops them."""
+        names = self._alloc(self._pending, len(values))
+        self._df = self._df.withColumns(dict(zip(names, values)))
+        return [F.col(n) for n in names]
 
     def _flush(self, carry: Column | None = None) -> Column | None:
         """Apply the pending writes mid-stage. Expressions built against
@@ -240,22 +282,17 @@ class Event:
         if not self._pending:
             return carry
         ups, self._pending = self._pending, {}
-        if self._cond is not None and not self._temps:  # first flush
+        if not self._cond_pinned:  # first flush
             self._cond = self._temp(ups, self._cond)
+            self._cond_pinned = True
         if carry is not None:
             carry = self._temp(ups, carry)
         self._df = with_paths(self._df, ups)
         return carry
 
     def _temp(self, ups: dict[str, Column], value: Column) -> Column:
-        taken = ({c.lower() for c in self._df.columns}
-                 | {split_path(p)[0].lower() for p in ups})
-        i = len(self._temps)
-        while f"__ev{i}__" in taken:
-            i += 1
-        name = f"__ev{i}__"
+        name, = self._alloc(ups, 1)
         ups[name] = value
-        self._temps.append(name)
         return F.col(name)
 
     def _sync(self, path: str, carry: Column | None = None) -> Column | None:
@@ -311,12 +348,6 @@ class Event:
         return self._df.drop(*self._temps) if self._temps else self._df
 
 
-def rename_path(df: DataFrame, src: str, dst: str) -> DataFrame:
-    """Move a field (actions/rename.go:75 renameField = copy + delete)."""
-    df = with_path(df, dst, get_path(df, src))
-    return drop_path(df, src)
-
-
 def tags_expr(ev: Event, tags: list[str], target: str = "tags") -> Column:
     """Expression appending tags to an array field, creating it if needed
     (MapStr.AddTagsWithKey, mapstr.go:390-412; de-dup preserving order is
@@ -333,38 +364,23 @@ def tags_expr(ev: Event, tags: list[str], target: str = "tags") -> Column:
     return F.concat(base, F.array(*[F.lit(t) for t in tags]))
 
 
-def add_tags(df: DataFrame, tags: list[str], target: str = "tags") -> DataFrame:
-    ev = Event(df)
-    ev.set(target, tags_expr(ev, tags, target))
-    return ev.frame()
-
-
-def append_flag(df: DataFrame, flag: str, cond: Column | None = None,
-                path: str = "log.flags") -> DataFrame:
-    """Append a value to log.flags (beat.FlagField semantics), optionally
-    only on rows matching ``cond``; used for *_parsing_error / truncated."""
-    existing = get_path(df, path)
-    existing_t = path_type(df.schema, path)
+def append_flag(ev: Event, flag: str, cond: Column,
+                path: str = "log.flags") -> None:
+    """Append a value to log.flags (beat.FlagField semantics) on rows
+    matching ``cond``; used for *_parsing_error / truncated."""
+    existing_t = ev.type(path)  # before get: type may flush
+    existing = ev.get(path)
     if isinstance(existing_t, T.ArrayType):
         base = F.coalesce(existing, F.array().cast("array<string>"))
     else:
         base = F.array().cast("array<string>")
     appended = F.array_union(base, F.array(F.lit(flag)))
-    if cond is not None:
-        new_val = F.when(cond, appended).otherwise(
-            existing if existing_t is not None else F.lit(None).cast("array<string>")
-        )
-    else:
-        new_val = appended
-    return with_path(df, path, new_val)
+    ev.set(path, F.when(cond, appended).otherwise(existing))
 
 
-def set_error_message(df: DataFrame, failed: Column, message: str) -> DataFrame:
+def set_error_message(ev: Event, failed: Column, message: str) -> None:
     """Set ``error.message`` on failing rows while PRESERVING an earlier
     processor's message on rows that succeeded (the shared
     grok/dissect/syslog ``ignore_failure=False`` idiom)."""
-    prev = (get_path(df, "error.message")
-            if has_path(df.schema, "error.message")
-            else F.lit(None).cast("string"))
-    return with_path(df, "error.message",
-                     F.when(failed, F.lit(message)).otherwise(prev))
+    ev.set("error.message", F.when(failed, F.lit(message))
+           .otherwise(ev.get("error.message")))

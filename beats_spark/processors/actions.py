@@ -12,8 +12,8 @@ from typing import Any
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql import types as T
 
-from beats_spark.event import (Event, append_flag, get_path, has_path,
-                               path_type, tags_expr, with_path)
+from beats_spark.event import (Event, append_flag, get_path, path_type,
+                               tags_expr, with_path)
 from beats_spark.processors.base import Stage, register
 
 # fields the reference refuses to drop (actions/drop_fields.go:24) mapped to
@@ -255,39 +255,29 @@ def truncate_fields(cfg: dict[str, Any]) -> Stage:
         raise ValueError("truncate_fields: exactly one of max_characters/max_bytes")
 
     class Truncate(Stage):
-        def apply(self, df: DataFrame, cond: Column | None = None) -> DataFrame:
-            # conditions must be evaluated against PRE-truncation values, so
-            # the flag is materialized into a temp column before mutation
+        def updates(self, ev: Event) -> None:
+            # every value resolves against the pre-truncation frame (one
+            # batch), so the flag sees the original lengths
             any_trunc = F.lit(False)
-            plans = []
             for fld in fields:
-                if not has_path(df.schema, fld):
+                if not ev.has(fld):
                     continue
-                col = get_path(df, fld)
+                col = ev.get(fld)
                 if max_chars is not None:
                     clipped = F.substring(col, 1, int(max_chars))
                     did = F.length(col) > int(max_chars)
                 else:
                     b = F.encode(col, "UTF-8")
-                    # clip to max_bytes then walk back over a split UTF-8
-                    # sequence by dropping trailing continuation bytes
-                    clipped = F.expr(
-                        f"decode(substring(encode({'`'+fld.replace('.','`.`')+'`'}, 'UTF-8'), 1, {int(max_bytes)}), 'UTF-8')"
-                    )
-                    # Spark's decode replaces a trailing partial sequence with
-                    # U+FFFD; strip any trailing replacement chars
-                    clipped = F.regexp_replace(clipped, "�+$", "")
+                    # clip to max_bytes; Spark's decode replaces a trailing
+                    # partial UTF-8 sequence with U+FFFD, so strip any
+                    # trailing replacement chars
+                    clipped = F.regexp_replace(F.decode(
+                        F.substring(b, 1, int(max_bytes)), "UTF-8"), "�+$", "")
                     did = F.length(b) > int(max_bytes)
                 did = F.coalesce(did, F.lit(False))
-                if cond is not None:
-                    did = cond & did
-                plans.append((fld, F.when(did, clipped).otherwise(col)))
+                ev.set(fld, F.when(did, clipped).otherwise(col))
                 any_trunc = any_trunc | did
-            df = df.withColumn("__trunc_flag", any_trunc)
-            for fld, new_val in plans:
-                df = with_path(df, fld, new_val)
-            df = append_flag(df, "truncated", cond=F.col("__trunc_flag"))
-            return df.drop("__trunc_flag")
+            append_flag(ev, "truncated", any_trunc)
 
     return Truncate()
 

@@ -14,11 +14,22 @@ fused into the SAME projection instead of branching per row:
   ``F.when(cond, new).otherwise(old)``; all writes land in one batched
   projection, flushed early only when a rule touches a path that is a
   segment-prefix of (or extends) an earlier write, or drops a field
-  unconditionally;
+  unconditionally. Parse stages (grok, dissect, kv, syslog,
+  community_id, truncate_fields) stage their intermediates with
+  ``ev.stage`` and report failure with ``append_flag``/
+  ``set_error_message`` in the same batch;
 - *filter*: ``keep() -> Column`` — under ``when`` it becomes
   ``~cond | keep`` (drop only matching rows);
-- *custom*: ``custom(df) -> df`` (mapInPandas etc.) — under ``when`` the
-  frame is split, transformed, and unioned back (rare; only ``script``).
+- *custom*: ``custom(df) -> df`` — under ``when`` the frame is split,
+  transformed, and unioned back, so the upstream plan is evaluated twice.
+  Only stages that change rows, the column set or join use it:
+  ``script`` (arbitrary Python over whole batches via mapInPandas),
+  ``multiline`` (merges rows per group), ``rate_limit`` (drops rows by a
+  window over earlier rows), ``include_fields`` (a select that prunes
+  every unlisted column), ``enrich`` (broadcast join),
+  ``enrich_cidr`` (broadcast joins, or inline maps built from a
+  driver-side collect of the dim) and ``registered_domain`` (join against
+  the public suffix list).
 
 Everything stays a single declarative plan: Catalyst sees through all of it.
 """

@@ -212,6 +212,8 @@ def decode_json_fields(cfg: dict[str, Any]) -> Stage:
                         {"columnNameOfCorruptRecord": "__corrupt"},
                     )
                     bad = col.isNotNull() & probe["__corrupt"].isNotNull()
+                    if cond is not None:
+                        bad = cond & bad
                     df = with_path(
                         df,
                         "error.message",

@@ -35,10 +35,10 @@ from typing import Any
 
 import pandas as pd
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, functions as F
 from pyspark.sql import types as T
 
-from beats_spark.event import append_flag, get_path, has_path
+from beats_spark.event import Event, append_flag, set_error_message
 from beats_spark.processors.base import Stage, register
 
 FLAG_PARSING_ERROR = "dissect_parsing_error"
@@ -508,40 +508,23 @@ def dissect(cfg: dict[str, Any]) -> Stage:
         raise ValueError("dissect: tokenizer not JVM-eligible (has append/"
                          "indirect/trim/ip/bool features)")
     if use_jvm:
-        udf, result_type = None, None
-        is_dynamic = False
+        out_names, is_dynamic = t.out_keys(), False
     else:
         pandas_engine = "regex" if engine in ("auto", "jvm", "pandas") else engine
         udf, result_type = build_extractor(tokenizer, trim_mode, trim_chars,
                                            pandas_engine)
-        is_dynamic = "_map" in [f.name for f in result_type.fields]
+        out_names = [f.name for f in result_type.fields
+                     if f.name not in ("_failed", "_map")]
+        is_dynamic = "_map" in result_type.fieldNames()
 
     class Dissect(Stage):
-        def apply(self, df: DataFrame, cond: Column | None = None) -> DataFrame:
-            if not has_path(df.schema, src):
+        def updates(self, ev: Event) -> None:
+            if not ev.has(src):
                 raise ValueError(f"dissect: field {src!r} not in schema")
-            if target and has_path(df.schema, target) and not overwrite_keys:
+            if target and ev.has(target) and not overwrite_keys:
                 raise ValueError(
                     f"dissect: target_prefix {target!r} exists (set overwrite_keys)"
                 )
-            src_col = get_path(df, src).cast("string")
-            tmp = None
-            if use_jvm:
-                failed, payload = build_jvm_columns(t, src_col)
-                out_names = t.out_keys()
-            else:
-                tmp = "__dissect_raw"
-                df = df.withColumn(tmp, udf(src_col))
-                failed = F.coalesce(F.col(f"{tmp}._failed"), F.lit(True))
-                if is_dynamic:
-                    payload = F.col(f"{tmp}._map")
-                    out_names = []
-                else:
-                    out_names = [f.name for f in result_type.fields
-                                 if f.name != "_failed"]
-                    payload = F.struct(
-                        *[F.col(f"{tmp}.{n}").alias(n) for n in out_names]
-                    )
             if is_dynamic and not target:
                 # a dynamic map cannot merge into the root of a static
                 # schema — silently losing the extraction would look like
@@ -551,37 +534,30 @@ def dissect(cfg: dict[str, Any]) -> Stage:
                     "non-empty target_prefix (map output cannot merge at "
                     "the schema root)"
                 )
-            if cond is not None:
-                failed = cond & failed
-                ok = cond & ~failed
+            src_col = ev.get(src).cast("string")
+            if use_jvm:
+                failed, payload = build_jvm_columns(t, src_col)
             else:
-                ok = ~failed
+                raw, = ev.stage(udf(src_col))
+                failed = F.coalesce(raw.getField("_failed"), F.lit(True))
+                payload = raw.getField("_map") if is_dynamic else F.struct(
+                    *[raw.getField(n).alias(n) for n in out_names])
+            # failed rows keep their PRE-EXISTING value (processor.go:
+            # failed events pass unchanged) — a bare when() would null it
             if target:
-                from beats_spark.event import with_path
-                # failed / condition-false rows keep their PRE-EXISTING
-                # target (processor.go: failed events pass unchanged) —
-                # a bare when() would null it out
-                old_t = (get_path(df, target)
-                         if has_path(df.schema, target) else None)
-                new_t = (F.when(ok, payload).otherwise(old_t)
-                         if old_t is not None else F.when(ok, payload))
-                df = with_path(df, target, new_t)
+                ev.set(target, F.when(~failed, payload)
+                       .otherwise(ev.get(target)))
             else:
                 # merge at root (target_prefix: "")
                 for n in out_names:
-                    pre = has_path(df.schema, n)
-                    if pre and not overwrite_keys:
+                    if ev.has(n) and not overwrite_keys:
                         raise ValueError(f"dissect: key {n!r} exists at root")
-                    v = F.when(ok, payload.getField(n))
-                    if pre:
-                        v = v.otherwise(get_path(df, n))
-                    df = df.withColumn(n, v)
-            df = append_flag(df, FLAG_PARSING_ERROR, cond=failed)
+                    ev.set(n, F.when(~failed, payload.getField(n))
+                           .otherwise(ev.get(n)))
+            append_flag(ev, FLAG_PARSING_ERROR, failed)
             if not ignore_failure:
-                from beats_spark.event import set_error_message
-                df = set_error_message(
-                    df, failed,
+                set_error_message(
+                    ev, failed,
                     f"dissect: parsing failure (tokenizer={tokenizer})")
-            return df.drop(tmp) if tmp else df
 
     return Dissect()

@@ -16,9 +16,9 @@ from __future__ import annotations
 
 from typing import Any
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, functions as F
 
-from beats_spark.event import get_path, has_path
+from beats_spark.event import Event
 from beats_spark.processors.base import Stage, register
 
 PROTO_NUMBERS = {
@@ -97,31 +97,24 @@ def community_id(cfg: dict[str, Any]) -> Stage:
         raise ValueError("community_id: seed must be a uint16")
 
     class CommunityID(Stage):
-        def custom(self, df: DataFrame) -> DataFrame:
-            from beats_spark.event import with_path
-
-            def col_or_null(path: str, t: str) -> Column:
-                if has_path(df.schema, path):
-                    return get_path(df, path).cast(t)
-                return F.lit(None).cast(t)
-
-            proto_name = F.lower(col_or_null(transport_f, "string"))
+        def updates(self, ev: Event) -> None:
+            proto_name = F.lower(ev.get(transport_f).cast("string"))
             proto_map = F.create_map(
                 *[F.lit(x) for kv in PROTO_NUMBERS.items() for x in kv]
             )
             proto = _gate(F.coalesce(
-                col_or_null(iana_f, "int"), proto_map[proto_name]
+                ev.get(iana_f).cast("int"), proto_map[proto_name]
             ), 0xFF)
-            src_ip, dst_ip = col_or_null(src_ip_f, "string"), col_or_null(dst_ip_f, "string")
-            sp = _gate(col_or_null(src_p_f, "int"), 0xFFFF)
-            dp = _gate(col_or_null(dst_p_f, "int"), 0xFFFF)
+            src_ip, dst_ip = ev.get(src_ip_f).cast("string"), ev.get(dst_ip_f).cast("string")
+            sp = _gate(ev.get(src_p_f).cast("int"), 0xFFFF)
+            dp = _gate(ev.get(dst_p_f).cast("int"), 0xFFFF)
 
             is_icmp4, is_icmp6 = proto == 1, proto == 58
             # a flow is hashed even when ICMP type/code are unavailable:
             # both default to 0 unless BOTH are present
             # (communityid.go:173-179 "Return a flow even if...")
-            raw_t = _gate(col_or_null(icmp_t_f, "int"), 0xFF)
-            raw_c = _gate(col_or_null(icmp_c_f, "int"), 0xFF)
+            raw_t = _gate(ev.get(icmp_t_f).cast("int"), 0xFF)
+            raw_c = _gate(ev.get(icmp_c_f).cast("int"), 0xFF)
             both = raw_t.isNotNull() & raw_c.isNotNull()
             icmp_t = F.when(both, raw_t).otherwise(F.lit(0))
             icmp_c = F.when(both, raw_c).otherwise(F.lit(0))
@@ -139,26 +132,8 @@ def community_id(cfg: dict[str, Any]) -> Stage:
             # them that many times blows up codegen. As attribute refs the
             # downstream expressions stay tiny (CollapseProject keeps
             # expensive multi-referenced aliases staged, SPARK-36718).
-            # free-name probe (case-insensitive, like with_paths' temps): a
-            # user column named __cid_sp must not be overwritten-then-dropped
-            names = ("proto", "sp", "dp", "sb", "db", "oneway")
-            existing = {c.lower() for c in df.columns}
-            tp, i = "__cid_", 0
-            while any((tp + s).lower() in existing for s in names):
-                i += 1
-                tp = f"__cid{i}_"
-            df = df.withColumns({
-                tp + "proto": proto,
-                tp + "sp": sp,
-                tp + "dp": dp,
-                tp + "sb": _ip_bytes(src_ip),
-                tp + "db": _ip_bytes(dst_ip),
-                tp + "oneway": one_way,
-            })
-            proto = F.col(tp + "proto")
-            sp, dp = F.col(tp + "sp"), F.col(tp + "dp")
-            sb, db = F.col(tp + "sb"), F.col(tp + "db")
-            one_way = F.col(tp + "oneway")
+            proto, sp, dp, sb, db, one_way = ev.stage(
+                proto, sp, dp, _ip_bytes(src_ip), _ip_bytes(dst_ip), one_way)
 
             # bytes.Compare via hex strings (lexicographic hex == byte order;
             # equal lengths within one address family)
@@ -179,7 +154,6 @@ def community_id(cfg: dict[str, Any]) -> Stage:
                 portful, F.concat(head, _u16be(a_p), _u16be(b_p))
             ).otherwise(head)
             cid = F.concat(F.lit("1:"), F.base64(F.unhex(F.sha1(payload))))
-            out = with_path(df, target, cid)
-            return out.drop(*[tp + c for c in names])
+            ev.set(target, cid)
 
     return CommunityID()

@@ -15,11 +15,10 @@ from __future__ import annotations
 import re
 from typing import Any
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, functions as F
 from pyspark.sql import types as T
 
-from beats_spark.event import (Event, _quote, append_flag, get_path, has_path,
-                               path_type, set_error_message, with_path)
+from beats_spark.event import Event, append_flag, set_error_message
 from beats_spark.processors.base import Stage, register
 
 # A small built-in pattern library (public grok idiom); users can extend via
@@ -157,10 +156,18 @@ def grok(cfg: dict[str, Any]) -> Stage:
             fmap.setdefault(name, []).append((j, i + 1, typ))
 
     class Grok(Stage):
-        def apply(self, df: DataFrame, cond: Column | None = None) -> DataFrame:
-            if not has_path(df.schema, src):
+        def updates(self, ev: Event) -> None:
+            if not ev.has(src):
                 raise ValueError(f"grok: field {src!r} not in schema")
-            col = get_path(df, src).cast("string")
+            if target:
+                t_type = ev.type(target)
+                if t_type is not None and not isinstance(t_type, T.StructType):
+                    # ES leaves an existing field untouched when grok fails;
+                    # a struct column replacing it would NULL it instead
+                    raise ValueError(
+                        f"grok: target_prefix {target!r} names an existing "
+                        f"{t_type.simpleString()} field, not an object")
+            col = ev.get(src).cast("string")
             # Stage every regex evaluation ONCE behind temp columns (match
             # flag per pattern + raw extract per capture site): the combine
             # layer below (nullif / exclusive selectors / coalesce) would
@@ -169,40 +176,33 @@ def grok(cfg: dict[str, Any]) -> Stage:
             # per-field projections into one generated function that blows
             # the JVM's 64 KB method limit and falls back to the
             # interpreter (observed on the 4-pattern apache module grok).
-            existing = {c.lower() for c in df.columns}
-            tp, i = "__grok_", 0
-            while any(x.lower().startswith(tp) for x in existing):
-                i += 1
-                tp = f"__grok{i}_"
-            flags = {
-                f"{tp}m{j}": F.coalesce(col.rlike(rx), F.lit(False))
-                for j, rx in enumerate(regexes)
-            }
-            df = df.withColumns(flags)
+            flags = ev.stage(*[F.coalesce(col.rlike(rx), F.lit(False))
+                               for rx in regexes])
             # extracts gated on the (already-staged, attribute-ref) match
             # flag: a pattern that did not match skips its regex scans
             # entirely — on a mostly-single-format corpus that saves
             # (patterns−1) × capture-sites full-regex scans per row
-            xcols: dict[str, Column] = {}
-            for name, sites in fmap.items():
-                for j, gi, _typ in sites:
-                    xcols[f"{tp}x{j}_{gi}"] = F.when(
-                        F.col(f"{tp}m{j}"),
-                        F.regexp_extract(col, regexes[j], gi))
-            df = df.withColumns(xcols)
+            all_sites = [(j, gi) for ss in fmap.values() for j, gi, _ in ss]
+            xs = dict(zip(all_sites, ev.stage(*[
+                F.when(flags[j], F.regexp_extract(col, regexes[j], gi))
+                for j, gi in all_sites])))
             # mutually exclusive pattern selectors: pattern j applies only
             # when no earlier pattern matched (ES tries in order)
             sels: list[Column] = []
             prior: Column = F.lit(False)
-            for j in range(len(regexes)):
-                h = F.col(f"{tp}m{j}")
+            for h in flags:
                 sels.append(h & ~prior)
                 prior = prior | h
             matched = prior
             # per field: value from the winning pattern (NULL from all
             # others — selectors are exclusive), written iff the winning
-            # pattern declares the field
-            cols: dict[str, tuple[Column, Column]] = {}
+            # pattern declares the field. Other rows keep any PRE-EXISTING
+            # destination value (a fallback grok chain over two formats
+            # must not null out what the previous grok extracted); with
+            # multiple patterns, fields absent from the winning pattern
+            # also keep their old value (ES writes only the winner's
+            # captures). Under a target the captures merge into the
+            # existing struct, keeping its other fields.
             for name, sites in fmap.items():
                 by_pat: dict[int, list[tuple[int, str]]] = {}
                 for j, gi, typ in sites:
@@ -214,8 +214,7 @@ def grok(cfg: dict[str, Any]) -> Stage:
                     # the alternation idiom (?:%{IP:host}|%{HOSTNAME:host}):
                     # the PARTICIPATING branch wins (non-participating
                     # groups extract ''), not first-declared
-                    cands = [F.nullif(F.col(f"{tp}x{j}_{gi}"), F.lit(""))
-                             for gi, _ in slist]
+                    cands = [F.nullif(xs[j, gi], F.lit("")) for gi, _ in slist]
                     v = cands[0] if len(cands) == 1 else F.coalesce(*cands)
                     if not null_empty:
                         # a matched row whose capture is genuinely empty
@@ -235,87 +234,12 @@ def grok(cfg: dict[str, Any]) -> Stage:
                 uniq = {t for t in declared if t}
                 if len(uniq) == 1 and all(declared):
                     val = val.try_cast(_GROK_TYPES.get(uniq.pop(), "string"))
-                if cond is not None:
-                    written = cond & written
-                cols[name] = (val, written)
-            failed = ~matched
-            if cond is not None:
-                failed = cond & failed
-            # non-matching / condition-false rows keep any PRE-EXISTING
-            # destination value (a fallback grok chain over two formats
-            # must not null out what the previous grok extracted); with
-            # multiple patterns, fields absent from the winning pattern
-            # also keep their old value (ES writes only the winner's
-            # captures)
-            if target:
-                t_type = path_type(df.schema, target)
-                if t_type is not None and not isinstance(t_type, T.StructType):
-                    # ES leaves an existing field untouched when grok fails;
-                    # a struct column replacing it would NULL it instead
-                    raise ValueError(
-                        f"grok: target_prefix {target!r} names an existing "
-                        f"{t_type.simpleString()} field, not an object")
-                if isinstance(t_type, T.StructType):
-                    # MERGE captures into the existing struct (withField):
-                    # pre-existing fields no capture writes survive matched
-                    # rows, and both branches of the null-struct split have
-                    # the identical shape — replacing the whole struct
-                    # dropped foreign fields and failed analysis against a
-                    # differently-shaped old struct (r4 ADVICE finding)
-                    old = get_path(df, target)
-                    merged = old
-                    for n, (v, w) in cols.items():
-                        prev = (get_path(df, f"{target}.{n}")
-                                if has_path(df.schema, f"{target}.{n}")
-                                else F.lit(None))
-                        merged = merged.withField(
-                            _quote(n), F.when(w, v).otherwise(prev))
-                    # a NULL old struct nullifies withField — matched rows
-                    # must still create the struct, with the same shape:
-                    # old fields (null unless captured) in order, then
-                    # appended capture fields
-                    fresh: list[Column] = []
-                    old_names = set()
-                    for f_ in t_type.fields:
-                        old_names.add(f_.name)
-                        if f_.name in cols:
-                            v, w = cols[f_.name]
-                            fresh.append(F.when(w, v).alias(f_.name))
-                        else:
-                            fresh.append(
-                                F.lit(None).cast(f_.dataType).alias(f_.name))
-                    for n, (v, w) in cols.items():
-                        if n not in old_names:
-                            fresh.append(F.when(w, v).alias(n))
-                    # a NULL old struct on a row NO pattern matched stays
-                    # NULL (ES never creates the target on grok failure) —
-                    # an unguarded fresh struct would be non-null all-NULL
-                    any_written = F.lit(False)
-                    for _, w in cols.values():
-                        any_written = any_written | w
-                    payload = F.when(old.isNotNull(), merged) \
-                        .otherwise(F.when(any_written, F.struct(*fresh)))
-                else:
-                    # no pre-existing struct: build from captures only
-                    payload = F.struct(*[
-                        F.when(w, v).alias(n) for n, (v, w) in cols.items()])
-                    any_written = F.lit(False)
-                    for _, w in cols.values():
-                        any_written = any_written | w
-                    payload = F.when(any_written, payload)
-                df = with_path(df, target, payload)
-            else:
-                # every capture lands in one batched projection (a
-                # with_path per dotted capture cost 3 eager analyses each)
-                ev = Event(df)
-                for n, (v, w) in cols.items():
-                    ev.set(n, F.when(w, v).otherwise(ev.get(n)))
-                df = ev.frame()
+                path = f"{target}.{name}" if target else name
+                ev.set(path, F.when(written, val).otherwise(ev.get(path)))
             # failure is always visible in log.flags (like dissect);
             # error.message only without ignore_failure
-            df = append_flag(df, "grok_parsing_error", cond=failed)
+            append_flag(ev, "grok_parsing_error", ~matched)
             if not ignore_failure:
-                df = set_error_message(df, failed, "grok: no pattern matched")
-            return df.drop(*flags, *xcols)
+                set_error_message(ev, ~matched, "grok: no pattern matched")
 
     return Grok()

@@ -40,9 +40,9 @@ from __future__ import annotations
 import re
 from typing import Any
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, functions as F
 
-from beats_spark.event import append_flag, get_path, has_path, with_path
+from beats_spark.event import Event, append_flag
 from beats_spark.processors.base import Stage, register
 
 
@@ -77,12 +77,12 @@ def kv(cfg: dict[str, Any]) -> Stage:
         raise ValueError(f"kv: unknown config keys {sorted(unknown)}")
 
     class KV(Stage):
-        def custom(self, df: DataFrame) -> DataFrame:
-            if not has_path(df.schema, field):
+        def updates(self, ev: Event) -> None:
+            if not ev.has(field):
                 if ignore_missing:
-                    return df
+                    return
                 raise ValueError(f"kv: missing field {field!r}")
-            src = get_path(df, field).cast("string")
+            src = ev.get(field).cast("string")
             parts = F.filter(F.split(src, field_split, -1),
                              lambda p: p != "")
             split1 = lambda p: F.split(p, value_split, 2)  # noqa: E731
@@ -145,7 +145,7 @@ def kv(cfg: dict[str, Any]) -> Stage:
                 failed = failed | F.coalesce(src.isNotNull() & malformed,
                                              F.lit(False))
             ok = ~failed & src.isNotNull()
-            out = with_path(df, target, F.when(ok, m))
-            return append_flag(out, "kv_parsing_error", cond=failed)
+            ev.set(target, F.when(ok, m))
+            append_flag(ev, "kv_parsing_error", failed)
 
     return KV()

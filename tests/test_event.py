@@ -3,14 +3,14 @@
 from pyspark.sql import functions as F
 
 from beats_spark.event import (
-    add_tags,
+    Event,
     append_flag,
     drop_path,
     get_path,
     has_path,
-    rename_path,
     with_path,
 )
+from beats_spark.processors import build_stage
 
 
 def test_with_path_creates_nested(spark):
@@ -40,7 +40,8 @@ def test_drop_and_rename(spark):
     df = with_path(df, "s.y", F.lit(6))
     df = drop_path(df, "s.x")
     assert not has_path(df.schema, "s.x") and has_path(df.schema, "s.y")
-    df = rename_path(df, "s.y", "t.z")
+    df = build_stage("rename", {"fields": [{"from": "s.y", "to": "t.z"}]}
+                     ).apply(df)
     assert not has_path(df.schema, "s") and df.collect()[0]["t"]["z"] == 6
 
 
@@ -52,12 +53,18 @@ def test_drop_last_field_removes_root(spark):
 
 def test_add_tags_and_flags(spark):
     df = spark.createDataFrame([(1,)], "id int")
-    df = add_tags(df, ["t1", "t2"])
-    df = add_tags(df, ["t3"])
+    df = build_stage("add_tags", {"tags": ["t1", "t2"]}).apply(df)
+    df = build_stage("add_tags", {"tags": ["t3"]}).apply(df)
     assert df.collect()[0]["tags"] == ["t1", "t2", "t3"]
-    df = append_flag(df, "truncated", cond=F.col("id") == 1)
+
+    def flagged(df, flag, cond):
+        ev = Event(df)
+        append_flag(ev, flag, cond)
+        return ev.frame()
+
+    df = flagged(df, "truncated", F.col("id") == 1)
     assert df.collect()[0]["log"]["flags"] == ["truncated"]
-    df2 = append_flag(df, "x", cond=F.col("id") == 99)
+    df2 = flagged(df, "x", F.col("id") == 99)
     assert df2.collect()[0]["log"]["flags"] == ["truncated"]
 
 
@@ -133,6 +140,16 @@ def test_with_paths_all_null_root_stays_null(spark):
                           "s": F.lit("x")}).collect()[0]
     assert out["r"] is None       # every written value NULL → root NULL
     assert out["s"] == "x"
+
+
+def test_with_paths_keeps_write_order_of_new_roots(spark):
+    """New roots are appended in write order, whether written whole or
+    per nested field."""
+    from beats_spark.event import with_paths
+
+    df = spark.createDataFrame([(1,)], "n int")
+    out = with_paths(df, {"q.z": F.lit(1), "flat": F.lit(2), "r.y": F.lit(3)})
+    assert out.columns == ["n", "q", "flat", "r"]
 
 
 def test_event_prefix_overlap_applies_in_order(spark):

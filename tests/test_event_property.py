@@ -3,12 +3,13 @@
 
 Hypothesis draws a nested schema (structs may be NULL per row) and an
 ordered write list mixing literal sets, NULL sets, sets that read another
-path (possibly written earlier in the list) and drops. Paths repeat and
-overlap by prefix. With a condition, each fold step is
-``when(cond, v).otherwise(current)``, with the condition evaluated once on
-the input frame as the reference evaluates ``when`` before the processor
-runs. All-NULL structs are mapped to NULL on both sides: that corner is
-order-dependent (see ``with_paths``).
+path (possibly written earlier in the list), the same read landed through
+``Event.stage``, and drops. Paths repeat and overlap by prefix. With a
+condition, each fold step is ``when(cond, v).otherwise(current)``, with
+the condition evaluated once on the input frame as the reference
+evaluates ``when`` before the processor runs. All-NULL structs are
+mapped to NULL on both sides: that corner is order-dependent (see
+``with_paths``).
 """
 
 from __future__ import annotations
@@ -70,6 +71,7 @@ write = st.one_of(
     st.tuples(st.just("lit"), path, st.sampled_from(["L1", "L2"])),
     st.tuples(st.just("null"), path),
     st.tuples(st.just("read"), path, path),
+    st.tuples(st.just("stage"), path, path),
     st.tuples(st.just("drop"), path),
 )
 # None, a condition on a column no write touches, or one on a written path
@@ -94,6 +96,8 @@ def via_event(df, writes, cond):
             ev.set(p, F.lit(None).cast("string"))
         elif op == "read":
             ev.set(p, ev.get(w[2]))
+        elif op == "stage":
+            ev.set(p, ev.stage(ev.get(w[2]))[0])
         else:
             ev.drop(p)
     return ev.frame()
@@ -114,7 +118,8 @@ def via_fold(df, writes, cond):
             continue
         v = {"lit": lambda: F.lit(w[-1]),
              "null": lambda: F.lit(None).cast("string"),
-             "read": lambda: get_path(df, w[-1])}[op]()
+             "read": lambda: get_path(df, w[-1]),
+             "stage": lambda: get_path(df, w[-1])}[op]()
         if cond is not None:
             v = F.when(cond, v).otherwise(get_path(df, p))
         df = with_path(df, p, v)
@@ -154,6 +159,10 @@ FLAT_A = ("id int, a struct<x: string>", [(0, ("old",)), (1, None), (2, (None,))
 # reads (a.x) must not change which rows the later drop applies to
 @example(frame=FLAT_A, writes=[("lit", "a.x", "L1"), ("drop", "a")],
          cond_kind="a.x")
+# a staged value set under cond, then carried through a flush, leaves no
+# temp column behind
+@example(frame=FLAT_A, writes=[("stage", "c", "a.x"), ("lit", "a.x", "L1"),
+                               ("read", "a", "c")], cond_kind="a.x")
 def test_event_matches_sequential_fold(spark, frame, writes, cond_kind):
     schema, rows = frame
     df = spark.createDataFrame(rows, schema)

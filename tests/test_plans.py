@@ -193,3 +193,57 @@ def test_library_calls_no_private_pyspark_api():
         if private.search(line)
     ]
     assert hits == []
+
+
+_WHEN = {"equals": {"role": "user"}}
+
+
+@pytest.mark.parametrize("name, cfg, union", [
+    ("grok", {"pattern": "level=%{WORD:level} %{GREEDYDATA:rest}",
+              "field": "text", "target_prefix": "g"}, False),
+    ("dissect", {"tokenizer": "level=%{level} %{rest}", "field": "text",
+                 "target_prefix": "p"}, False),
+    ("dissect", {"tokenizer": "level=%{level} %{rest}", "field": "text",
+                 "target_prefix": "p", "engine": "pandas"}, False),
+    ("kv", {"field": "text", "strict": False}, False),
+    ("syslog", {"field": "text"}, False),
+    ("truncate_fields", {"fields": ["text"], "max_bytes": 8}, False),
+    ("community_id", {"fields": {"source_ip": "conv_id",
+                                 "destination_ip": "tool",
+                                 "source_port": "turn_idx",
+                                 "destination_port": "turn_idx",
+                                 "transport": "role"}}, False),
+    # control: a custom stage under `when` still splits and unions
+    ("script", {"fn": lambda pdf: pdf}, True),
+], ids=["grok", "dissect-jvm", "dissect-pandas", "kv", "syslog",
+        "truncate_fields", "community_id", "script"])
+def test_when_guarded_stage_is_one_projection(spark, tdir, name, cfg, union):
+    """Under `when`, a projecting stage reads its input once: the optimized
+    plan has no Union and exactly one input relation (the reference runs a
+    when-guarded processor on the event it would have seen anyway)."""
+    from beats_spark.processors import build_stage
+
+    st = build_stage(name, {**cfg, "when": _WHEN})
+    plan = st.apply(spark.read.parquet(tdir))._jdf.queryExecution() \
+        .optimizedPlan()
+    assert ("Union" in plan.toString()) is union
+    assert plan.collectLeaves().size() == (2 if union else 1)
+
+
+def test_projecting_stages_write_through_event():
+    """Field writes go through the Event overlay: only the stages that
+    join or change rows (enrich, registered_domain, multiline), the
+    in-place type change of decode_json_fields and add_tags' scalar
+    pre-wrap still call with_path, and grok/dissect override no apply."""
+    import pathlib
+    import re
+
+    root = (pathlib.Path(__file__).resolve().parent.parent
+            / "beats_spark" / "processors")
+    allow = {"enrich.py", "domain.py", "stateful.py", "convert.py",
+             "actions.py"}
+    users = {p.name for p in root.glob("*.py")
+             if re.search(r"\bwith_path\b", p.read_text())}
+    assert users <= allow, sorted(users - allow)
+    for name in ("grok.py", "dissect.py"):
+        assert "def apply" not in (root / name).read_text(), name

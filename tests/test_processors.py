@@ -1077,19 +1077,31 @@ def test_uri_parts_unrooted_relative_inputs(spark):
     assert got["a/b.css"]["extension"] == "css"
 
 
-def test_community_id_user_cid_columns_survive(spark):
-    """Staging columns are collision-guarded: a user column named
-    __cid_sp must come out of the stage untouched (not silently
+@pytest.mark.parametrize("col, schema, row, cfg, check", [
+    ("__cid_sp",
+     "source struct<ip:string, port:int>, "
+     "destination struct<ip:string, port:int>, "
+     "network struct<transport:string>",
+     (("10.0.0.1", 1000), ("10.0.0.2", 80), ("tcp",)),
+     {"community_id": {}},
+     lambda r: r["network"]["community_id"].startswith("1:")),
+    # trim_values forces the pandas engine, which stages its UDF result
+    ("__dissect_raw", "message string", ("a b",),
+     {"dissect": {"tokenizer": "%{a} %{b}", "trim_values": "all"}},
+     lambda r: (r["dissect"]["a"], r["dissect"]["b"]) == ("a", "b")),
+    ("__trunc_flag", "message string", ("abcdef",),
+     {"truncate_fields": {"fields": ["message"], "max_characters": 3}},
+     lambda r: (r["message"], r["log"]["flags"]) == ("abc", ["truncated"])),
+], ids=["__cid_sp", "__dissect_raw", "__trunc_flag"])
+def test_user_columns_named_like_stage_temps_survive(spark, col, schema, row,
+                                                     cfg, check):
+    """Staging columns are collision-guarded: a user column named like a
+    stage's temp must come out of the stage untouched (not silently
     overwritten-then-dropped)."""
-    schema = ("source struct<ip:string, port:int>, "
-              "destination struct<ip:string, port:int>, "
-              "network struct<transport:string>, "
-              "__cid_sp string")
-    df = spark.createDataFrame(
-        [(("10.0.0.1", 1000), ("10.0.0.2", 80), ("tcp",), "keepme")], schema)
-    out = run_df(spark, df, [{"community_id": {}}]).collect()[0]
-    assert out["__cid_sp"] == "keepme"
-    assert out["network"]["community_id"].startswith("1:")
+    df = spark.createDataFrame([(*row, "keepme")], f"{schema}, {col} string")
+    out = run_df(spark, df, [cfg]).collect()[0]
+    assert out[col] == "keepme"
+    assert check(out)
 
 
 def test_grok_bare_groups_do_not_shift_captures(spark):
@@ -1224,3 +1236,52 @@ def test_grok_target_prefix_on_non_struct_field_raises(spark):
             "text string, t string",
             [{"grok": {"pattern": "id=%{INT:id}", "field": "text",
                        "target_prefix": "t"}}])
+
+
+def test_decode_json_add_error_key_respects_when(spark):
+    """add_error_key marks only the rows the ``when`` condition selects."""
+    out = run(
+        spark, [("not json", "x"), ("also bad", "y")], "msg string, kind string",
+        [{"decode_json_fields": {"fields": ["msg"], "add_error_key": True,
+                                 "schema": "k int",
+                                 "when": {"equals": {"kind": "x"}}}}],
+    ).orderBy("kind").collect()
+    hit, miss = out
+    assert hit["error"]["message"] == "Error decoding JSON field"
+    assert miss["error"] is None or miss["error"]["message"] is None
+
+
+def test_syslog_dotted_target_nests(spark):
+    """target_prefix is a dotted path: the parse lands under log.syslog,
+    next to log.flags, not in a literal top-level ``log.syslog`` column."""
+    out = run(spark, [("<34>Oct 11 22:14:15 host su[1]: m",)],
+              "message string",
+              [{"syslog": {"target_prefix": "log.syslog"}}]).collect()[0]
+    assert "log.syslog" not in out.asDict()
+    assert out["log"]["syslog"]["hostname"] == "host"
+    assert out["log"]["syslog"]["pid"] == 1
+    assert out["log"]["flags"] is None
+
+
+@pytest.mark.parametrize("engine", ["auto", "pandas"])
+def test_dissect_root_target_dotted_key_nests(spark, engine):
+    """A dotted key merged at the root nests like every other field write,
+    instead of creating a literal ``x.y`` column."""
+    out = run(spark, [("a b",)], "message string",
+              [{"dissect": {"tokenizer": "%{x.y} %{z}", "target_prefix": "",
+                            "engine": engine}}]).collect()[0]
+    assert "x.y" not in out.asDict()
+    assert out["x"]["y"] == "a" and out["z"] == "b"
+
+
+def test_grok_dotted_capture_under_target_nests(spark):
+    """A dotted capture nests under target_prefix the same way it nests at
+    the root target."""
+    cfg = {"pattern": "%{IP:source.ip} %{WORD:verb}", "field": "text"}
+    rows = [("10.0.0.1 GET",)]
+    root = run(spark, rows, "text string", [{"grok": cfg}]).collect()[0]
+    under = run(spark, rows, "text string",
+                [{"grok": {**cfg, "target_prefix": "p"}}]).collect()[0]
+    assert root["source"].asDict() == {"ip": "10.0.0.1"}
+    assert under["p"].asDict(True) == {"source": {"ip": "10.0.0.1"},
+                                       "verb": "GET"}
